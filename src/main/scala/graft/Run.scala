@@ -18,8 +18,7 @@ import graft.sources.CorpusIO
   *     --input <dir> [--format jsonl|parquet|csv|warc] | --synth <N> \
   *     --output <dir> [--out-format jsonl|parquet] \
   *     [--repartition <n>] [--lineage [--buckets-per-commit <k>]] \
-  *     [--no-minhash] [--no-exact] [--minhash-salt <s>] \
-  *     [--minhash-salt-hot <members>] \
+  *     [--no-minhash] [--no-exact] \
   *     [--cc-driver-max-edges <m>] [--url-blocklist <file>] \
   *     [--extract-html] [--url-dedup] [--span-dedup <w>] \
   *     [--substring-dedup <w>] [--frequent-lines <maxDocs>[,<minWords>]] \
@@ -275,17 +274,6 @@ object Run {
       if (a.get("out-format").exists(_ != "parquet"))
         sys.error("--compact-target requires --out-format parquet " +
           "(jsonl sinks are compacted by targetRowsPerFile at write time)")
-    }
-    if (a.contains("minhash-salt-hot")) {
-      // selective salting only exists inside the salted path: without a
-      // bucket count > 1 the threshold would silently no-op, and the skew
-      // mitigation the caller explicitly requested would never run
-      if (!a.get("minhash-salt").exists(_.toIntOption.exists(_ > 1)))
-        sys.error("--minhash-salt-hot requires --minhash-salt <buckets> " +
-          "with buckets > 1")
-      if (!a("minhash-salt-hot").toLongOption.exists(_ > 1))
-        sys.error("--minhash-salt-hot must be > 1 (a band group of 1 " +
-          "member produces no join work to salt)")
     }
     val spark = SparkSession.builder()
       .appName("graft-corpus-pipeline")
@@ -645,19 +633,13 @@ object Run {
     val cfg = graft.model.PipelineConfig(
       exactDedup = !a.contains("no-exact"),
       minhashDedup = !a.contains("no-minhash"),
-      // cluster-deploy tunables (north rule: explicit skew handling):
-      // --minhash-salt N shards hot band hashes, --cc-driver-max-edges
-      // bounds the driver union-find fast path for small drivers
-      minhashSaltBuckets = a.get("minhash-salt").map(_.toInt).getOrElse(0),
-      // --minhash-salt-hot T: with --minhash-salt, salt ONLY band groups
-      // larger than T members (selective skew handling)
-      minhashHotBandThreshold = a.get("minhash-salt-hot").map(_.toLong)
-        .getOrElse(0L),
       // --minhash-verify <t>: re-check band-collision candidates against
       // the full signature vectors; cluster only pairs with estimated
       // Jaccard >= t (off = reference's any-shared-band semantics).
       // Parsed above, shared with the --ref-sigs gate.
       minhashVerifyThreshold = minhashVerify,
+      // --cc-driver-max-edges bounds the driver union-find fast path for
+      // small drivers (cluster-deploy tunable)
       ccDriverMaxEdges = a.get("cc-driver-max-edges").map(_.toLong)
         .getOrElse(graft.dedup.MinHash.DriverCcMaxEdges),
       // --url-blocklist <file>: one registrable domain per line enables

@@ -190,20 +190,12 @@ object NearDup {
     * verifies each candidate against `minJaccard`. This is the
     * "MinHash with exact verification" variant datatrove omits (its
     * stage 2 trusts the bands — SURVEY.md §2.5 D6).
-    *
-    * `saltBuckets > 1` routes blocking through
-    * [[MinHash.candidateEdgesSalted]] — identical edge set, hot band
-    * hashes sharded — mirroring every sibling near-dup path (MinHash
-    * dedup, SimHash pairs, embedding near-pairs).
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    minJaccard: Double, n: Int = 3,
-                   cfg: MinHash.Config = MinHash.Config(),
-                   saltBuckets: Int = 0): DataFrame = {
-    val sigs = MinHash.signatures(df, idCol, textCol, cfg)
-    val edges =
-      if (saltBuckets > 1) MinHash.candidateEdgesSalted(sigs, saltBuckets)
-      else MinHash.candidateEdges(sigs)
+                   cfg: MinHash.Config = MinHash.Config()): DataFrame = {
+    val edges = MinHash.candidateEdges(
+      MinHash.signatures(df, idCol, textCol, cfg))
     val texts = df.select(col(idCol).as("_id"), col(textCol).as("_text"))
     edges
       .join(texts.withColumnRenamed("_id", "src")

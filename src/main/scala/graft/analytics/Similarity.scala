@@ -157,10 +157,9 @@ object Similarity {
     * filters by `minSim`. Shuffles only bucket-colocated pairs —
     * O(sum of bucket sizes squared), not O(n²).
     *
-    * Skew hardening (same family as MinHash.candidateEdgesSalted, but
-    * output-preserving): the bucket self-join runs over NARROW
-    * (id, band, bucket) rows — full vectors are fetched by id only for
-    * the deduplicated candidate pairs — and buckets whose membership
+    * Skew hardening (output-preserving): the bucket self-join runs over
+    * NARROW (id, band, bucket) rows — full vectors are fetched by id only
+    * for the deduplicated candidate pairs — and buckets whose membership
     * exceeds `hotBucketThreshold` are split into `saltBuckets` shards:
     * side A keyed by salt(id_a), side B replicated across all shards.
     * Every pair still appears in exactly ONE shard, so the result set is

@@ -34,25 +34,6 @@ object MinHash {
       rowsPerBand: Int = 8,
       shingleSize: Int = 5,
       seed: Long = 42L,
-      /** >0 enables the salted band join ([[candidateEdgesSalted]]):
-        * each (band_id, band_hash) group is split into this many salt
-        * shards so one pathological band hash can't pin a single task.
-        * 0 (default) uses the star-reduction join, whose partial
-        * aggregation already absorbs hot keys map-side; salting trades
-        * ~saltBuckets× more (still linear) edges for strictly bounded
-        * per-task group sizes — the right call when one cluster holds
-        * double-digit percent of the corpus.
-        */
-      saltBuckets: Int = 0,
-      /** >0 (with saltBuckets > 1) switches to SELECTIVE salting
-        * ([[candidateEdgesSaltedHot]]): only band groups with more than
-        * this many members are salt-split; cold groups keep the plain
-        * star-reduction join. The r4 10M stress measured full salting at
-        * max-task −21% for +57% shuffle — selective salting buys the
-        * same tail cut for extra shuffle proportional to the HOT rows
-        * only. 0 (default) keeps the all-or-nothing behavior.
-        */
-      hotBandThreshold: Long = 0L,
       /** Edge-count ceiling for the driver-side union-find fast path in
         * [[clusters]]; deployments with small drivers can lower it (or 0
         * to force the distributed CC loop).
@@ -252,10 +233,22 @@ object MinHash {
     * (thousands of splits) this is a no-op, so no shuffle is added at
     * scale; locally it turns a 1-task 200 ms UDF stage into 32 tasks.
     * Results are unaffected: every consumer is id-keyed or aggregated.
+    *
+    * The split count comes from the plan: under AQE `df.rdd` runs the
+    * input's shuffle and broadcast stages (the pipeline passes an
+    * anti-join) only to discard them. AQE wraps only plans with an
+    * exchange, whose planned width is read instead (0 = unknown: left
+    * alone); `df.rdd` of any other plan is its scan splits, no job.
     */
   private def parallelized(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < par) df.repartition(par) else df
+    val splits = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        Some(a.executedPlan.outputPartitioning.numPartitions).filter(_ > 0)
+      case _ => Some(df.rdd.getNumPartitions)
+    }
+    if (splits.exists(_ * 2 < par)) df.repartition(par) else df
   }
 
   /** The fully declarative Catalyst formulation (north-star shape:
@@ -302,7 +295,11 @@ object MinHash {
     // full signature pass twice — 4× slower unpersisted.) Hot band hashes
     // are absorbed map-side by the partial min/count aggregation (star
     // reduction: O(members) edges, never O(members²) pairs), and AQE's
-    // skew-join splitting covers the probe side.
+    // skew-join splitting covers the probe side. That is why this is the
+    // only band join: salted variants (same edge set) never paid — at 10M
+    // selective salting raised the dedup max task 35.9 → 38.3 s, at 5M
+    // full salting cost +9% wall and +65% shuffle write, and the
+    // one-giant-cluster benchmark workload shows no band-key task skew.
     val reps = sigs.groupBy("band_id", "band_hash")
       .agg(min("id").as("dst"), count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1)
@@ -490,112 +487,6 @@ object MinHash {
     markAgainst(newDf, idCol, textCol, refSigs, cfg,
         precomputedReps = precomputedReps)
       .filter(!col("is_minhash_dup")).drop("is_minhash_dup")
-
-  /** Salted skew-aware variant of [[candidateEdges]]: the group key is
-    * extended with `salt = pmod(xxhash64(id), saltBuckets)`, so a hot
-    * band hash spreads across `saltBuckets` shards and no aggregation or
-    * join task ever sees a hot group's full membership. The group-global
-    * min is recovered from the tiny per-shard table (≤ saltBuckets rows
-    * per group) and attached back through the shard key, so the emitted
-    * edge set is EXACTLY [[candidateEdges]]' star set (member →
-    * band-group min; SkewSpec asserts set equality, not just the same
-    * connected components). That identity is what lets
-    * [[verifiedEdges]] compose with salting: verification filters the
-    * same pair set either way, so `verifyThreshold` + `saltBuckets`
-    * yield salt-invariant clusters by construction. (The earlier form
-    * emitted per-shard stars plus pure-connectivity connector edges —
-    * CC-equivalent unverified, but verification would have Jaccard-
-    * tested connector pairs that are bucket-mates, not candidate dups,
-    * making the kept/removed ledger depend on an ops-only tunable.)
-    */
-  def candidateEdgesSalted(sigs: DataFrame, saltBuckets: Int): DataFrame = {
-    require(saltBuckets > 1, "saltBuckets must be > 1")
-    val salted = sigs.withColumn("salt",
-      pmod(xxhash64(col("id")), lit(saltBuckets)))
-    val shardReps = salted.groupBy("band_id", "band_hash", "salt")
-      .agg(min("id").as("smin"), count(lit(1)).as("cnt"))
-    // group min over the shard table: ≤ saltBuckets rows per (band,
-    // hash) key, so the hot group's second-level aggregation is bounded
-    val groupMin = shardReps.groupBy("band_id", "band_hash")
-      .agg(min("smin").as("dst"), sum("cnt").as("members"))
-      .filter(col("members") > 1)
-      .select("band_id", "band_hash", "dst")
-    // re-key the group min by (band, hash, salt) — still a tiny table —
-    // then probe with the members: the join key carries the salt, so a
-    // hot group's probe rows stay spread across its saltBuckets shards
-    val shardToMin = shardReps
-      .join(groupMin, Seq("band_id", "band_hash"))
-      .select("band_id", "band_hash", "salt", "dst")
-    salted.join(shardToMin, Seq("band_id", "band_hash", "salt"))
-      .filter(col("id") =!= col("dst"))
-      .select(col("id").as("src"), col("dst"))
-      .distinct()
-  }
-
-  /** Cap on hot (band_id, band_hash) keys collected to the driver by
-    * [[candidateEdgesSaltedHot]] — same discipline as
-    * [[graft.analytics.Similarity.MaxHotKeysCollected]]: 10k longs is
-    * ~80 KB, keys past the cap simply stay unsalted (AQE skew splitting
-    * still applies; salting is edge-set-preserving, so the cap shifts
-    * work, never results).
-    */
-  val MaxHotBandKeys: Int = 10000
-
-  /** SELECTIVELY salted candidate edges: only band groups whose
-    * membership exceeds `hotThreshold` are salt-split; every cold group
-    * takes the plain star-reduction join. The group-size aggregation is
-    * the SAME one the unsalted path already runs (min + count per band
-    * group) and is materialized once for its two consumers (hot-key
-    * collect + cold-join build side), so against [[candidateEdges]] the
-    * extra cost is that bounded collect, the one materialization of the
-    * duplicates-sized counts table, and the re-grouping of the hot
-    * rows themselves — at 100 TB that is the difference between
-    * re-shuffling the whole signature table (full salting, +57% shuffle
-    * on the r4 10M stress) and re-shuffling one mega-cluster's rows.
-    * Hot-key detection hashes (band_id, band_hash); a collision can only
-    * mark a cold group hot, which is harmless (salting preserves the
-    * exact edge set — SkewSpec asserts equality).
-    */
-  def candidateEdgesSaltedHot(sigs: DataFrame, saltBuckets: Int,
-                              hotThreshold: Long): DataFrame = {
-    require(saltBuckets > 1, "saltBuckets must be > 1")
-    require(hotThreshold > 1, "hotThreshold must be > 1")
-    // materialized, because TWO consumers follow — the hot-key collect
-    // action and the cold join's build side. Unmaterialized, the full
-    // groupBy over the corpus-sized sigs would run twice; the counts
-    // table itself is O(duplicate band groups), far smaller than sigs
-    val counts = graft.SparkUtil.materialize(
-      sigs.groupBy("band_id", "band_hash")
-        .agg(min("id").as("dst"), count(lit(1)).as("cnt"))
-        .filter(col("cnt") > 1))
-    val hotKeys: Array[Long] = counts
-      .filter(col("cnt") > hotThreshold)
-      .orderBy(col("cnt").desc, col("band_id"), col("band_hash"))
-      .limit(MaxHotBandKeys)
-      .select(xxhash64(col("band_id"), col("band_hash")))
-      .collect().map(_.getLong(0))
-    if (hotKeys.isEmpty)
-      // no hot groups (the common defensive-flag case): the star
-      // reduction IS candidateEdges' join, built on the counts table
-      // already materialized above — calling candidateEdges(sigs) here
-      // would recompute the identical corpus-wide aggregation from
-      // scratch and strand the materialized blocks
-      return sigs.join(counts.drop("cnt"), Seq("band_id", "band_hash"))
-        .filter(col("id") =!= col("dst"))
-        .select(col("id").as("src"), col("dst"))
-        .distinct()
-    val keyHash = xxhash64(col("band_id"), col("band_hash"))
-    val isHot = keyHash.isInCollection(hotKeys)
-    // cold groups: star edges exactly as candidateEdges
-    val cold = sigs.filter(!isHot)
-      .join(counts.filter(!keyHash.isInCollection(hotKeys)).drop("cnt"),
-        Seq("band_id", "band_hash"))
-      .filter(col("id") =!= col("dst"))
-      .select(col("id").as("src"), col("dst"))
-    // hot groups: the salted two-level star over ONLY the hot rows
-    val hot = candidateEdgesSalted(sigs.filter(isHot), saltBuckets)
-    cold.unionByName(hot).distinct()
-  }
 
   /** Edge-count threshold under which CC runs as a driver-side union-find
     * over the collected edge list. The candidate-edge set is O(duplicates),
@@ -950,11 +841,7 @@ object MinHash {
       }
     }
     def computeClusters(): CcResult = {
-      val edges0 =
-        if (cfg.saltBuckets > 1 && cfg.hotBandThreshold > 0)
-          candidateEdgesSaltedHot(sigs, cfg.saltBuckets, cfg.hotBandThreshold)
-        else if (cfg.saltBuckets > 1) candidateEdgesSalted(sigs, cfg.saltBuckets)
-        else candidateEdges(sigs)
+      val edges0 = candidateEdges(sigs)
       val edges = vecs match {
         case Some(v) =>
           verifiedEdges(edges0, v, cfg.verifyThreshold).select("src", "dst")

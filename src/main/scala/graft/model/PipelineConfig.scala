@@ -61,15 +61,6 @@ case class PipelineConfig(
     minhashBands: Int = 14,
     minhashRowsPerBand: Int = 8,
     shingleSize: Int = 5,
-    // >1 routes the band join through MinHash.candidateEdgesSalted (hot
-    // band hashes sharded across this many salts); 0 = star-reduction
-    // join. Cluster-deploy tunable — see MinHash.Config.saltBuckets.
-    minhashSaltBuckets: Int = 0,
-    // >0 (with minhashSaltBuckets > 1) salts ONLY band groups larger
-    // than this (MinHash.candidateEdgesSaltedHot): the mega-cluster tail
-    // cut of full salting at a fraction of its extra shuffle. Cluster-
-    // deploy tunable — see MinHash.Config.hotBandThreshold.
-    minhashHotBandThreshold: Long = 0L,
     // >0 re-checks every band-collision candidate pair against the full
     // signature vectors and clusters only pairs whose estimated Jaccard
     // reaches this value (MinHash.verifiedEdges) — cuts the LSH S-curve's

@@ -382,13 +382,8 @@ object CorpusPipeline {
     val nearTbl: Option[(DataFrame, Option[Long])] =
       if (!cfg.minhashDedup) None
       else {
-        val mhCfg = MinHash.Config(cfg.minhashBands, cfg.minhashRowsPerBand,
-          cfg.shingleSize, saltBuckets = cfg.minhashSaltBuckets,
-          hotBandThreshold = cfg.minhashHotBandThreshold,
-          driverCcMaxEdges = cfg.ccDriverMaxEdges,
-          verifyThreshold = cfg.minhashVerifyThreshold)
         val (cl, clSize) = MinHash.clusterTable(stillAliveN, "url",
-          "scrubbed_text", mhCfg, stageDir = cfg.dedupStageDir)
+          "scrubbed_text", minhashConfig(cfg), stageDir = cfg.dedupStageDir)
         Some((cl.select(col("id").as("_mh_id"),
           col("cluster").cast("string").as("_mh_cluster"),
           (col("id") =!= col("cluster")).as("_mh_dup")), clSize))
@@ -426,6 +421,12 @@ object CorpusPipeline {
       .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
   }
 
+  /** The MinHash settings both dedup forms run with. */
+  private def minhashConfig(cfg: PipelineConfig): MinHash.Config =
+    MinHash.Config(cfg.minhashBands, cfg.minhashRowsPerBand, cfg.shingleSize,
+      driverCcMaxEdges = cfg.ccDriverMaxEdges,
+      verifyThreshold = cfg.minhashVerifyThreshold)
+
   /** Windowed branch form — correct for recurring ids (the keep-first
     * window ranks rows, not ids, and nothing joins back by id).
     */
@@ -449,13 +450,8 @@ object CorpusPipeline {
         val stillAlive = afterExact.filter(col("drop_stage").isNull)
         val exactDead = afterExact.filter(col("drop_stage").isNotNull)
           .withColumn("minhash_cluster", lit(null).cast("string"))
-        val mhCfg = MinHash.Config(cfg.minhashBands, cfg.minhashRowsPerBand,
-          cfg.shingleSize, saltBuckets = cfg.minhashSaltBuckets,
-          hotBandThreshold = cfg.minhashHotBandThreshold,
-          driverCcMaxEdges = cfg.ccDriverMaxEdges,
-          verifyThreshold = cfg.minhashVerifyThreshold)
-        val marked = MinHash.mark(stillAlive, "url", "scrubbed_text", mhCfg,
-            stageDir = cfg.dedupStageDir)
+        val marked = MinHash.mark(stillAlive, "url", "scrubbed_text",
+            minhashConfig(cfg), stageDir = cfg.dedupStageDir)
           .withColumn("drop_stage",
             when(col("is_near_dup"), lit(DropStage.MinhashDup)))
           .drop("is_near_dup")

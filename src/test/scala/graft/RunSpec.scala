@@ -567,19 +567,6 @@ class RunSpec extends SparkSpec {
     assert(e.getMessage.contains("--export-ordered"))
   }
 
-  test("--minhash-salt-hot composes: selective salting is ledger-invariant") {
-    // kernel CC-equivalence is pinned in SkewSpec; this pins the CLI
-    // plumbing end-to-end — a threshold low enough that the planted
-    // near-dup groups go hot, so the salted path actually runs
-    val json0 = Run.execute(spark, Map(
-      "synth" -> "2000", "output" -> dir()))
-    val json1 = Run.execute(spark, Map(
-      "synth" -> "2000", "output" -> dir(),
-      "minhash-salt" -> "8", "minhash-salt-hot" -> "2"))
-    assert(stages(json0) == stages(json1),
-      s"selective salting changed the stage ledger:\n$json0\n$json1")
-  }
-
   test("--compact-target collapses the kept output, preserving rows") {
     val out = dir()
     val json = Run.execute(spark, Map(
@@ -590,21 +577,6 @@ class RunSpec extends SparkSpec {
     assert(files == 1, s"expected 1 compacted file, got $files")
     assert(json.contains("\"compact_files\":1"), json)
     assert(spark.read.parquet(s"$out/kept").count() == stages(json)("kept"))
-  }
-
-  test("argv validation: --minhash-salt-hot alone or with value <= 1 " +
-    "fails loudly before any session work") {
-    val noSalt = intercept[RuntimeException] {
-      Run.main(Array("--output", "/tmp/x", "--minhash-salt-hot", "1000"))
-    }
-    assert(noSalt.getMessage.contains("--minhash-salt"),
-      s"error must name the missing flag: ${noSalt.getMessage}")
-    val badVal = intercept[RuntimeException] {
-      Run.main(Array("--output", "/tmp/x", "--minhash-salt", "8",
-        "--minhash-salt-hot", "1"))
-    }
-    assert(badVal.getMessage.contains("--minhash-salt-hot"),
-      s"error must name the offending flag: ${badVal.getMessage}")
   }
 
   test("--task-metrics reports aggregated task accounting in the JSON line") {

@@ -465,6 +465,44 @@ class MinHashSpec extends SparkSpec {
     assert(shared == 14)
   }
 
+  test("building signatures over a shuffled, joined input launches no job") {
+    // the parallelism repair reads the input's split count off its plan;
+    // asking `df.rdd` instead makes AQE run the input's shuffle and
+    // broadcast stages only to throw them away
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "minhash-build-probe"
+    val built = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => built.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    val docs = (0 until 200).map(i => (f"u$i%04d", doc(500L + i, 3)))
+      .toDF("url", "text")
+    val gone = docs.filter($"url" < "u0050").select($"url".as("_x"))
+    val joined = docs.repartition(8)
+      .join(gone, $"url" === $"_x", "left_anti").drop("_x")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build only")
+      try {
+        MinHash.signatures(joined, "url", "text")
+        MinHash.sigVectors(joined, "url", "text")
+      } finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job the build launched has been counted
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(built.get == 0, s"${built.get} job(s) ran while building")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("near-duplicates cluster, distinct docs do not") {
     val base = doc(2)
     val rows = Seq(
@@ -536,39 +574,6 @@ class MinHashSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       MinHash.verifiedEdges(empty, vecsDf, 0.0)
     }
-  }
-
-  test("verification composes with salting: kept/removed state is " +
-      "salt-invariant (full, selective, and unsalted agree)") {
-    implicit val s = spark
-    // one hot band group (a 24-member template cluster with small
-    // per-doc variations) plus unrelated docs: exactly the shape where
-    // the old connector-edge form let the salt bucketing decide which
-    // pairs verification Jaccard-tested
-    val base = doc(80)
-    val rows = (0 until 40).map { i =>
-      if (i < 24)
-        (f"h$i%03d", base + s"\nTrailing marker ${i % 5} closes the record.")
-      else (f"h$i%03d", doc(300 + i))
-    }
-    val df = rows.toDF("id", "text")
-    def state(m: org.apache.spark.sql.DataFrame) =
-      m.select("id", "minhash_cluster", "is_near_dup")
-        .as[(String, Option[String], Boolean)].collect().toSet
-    val unsalted = state(MinHash.mark(df, "id", "text",
-      MinHash.Config(verifyThreshold = 0.6)))
-    val salted = state(MinHash.mark(df, "id", "text",
-      MinHash.Config(verifyThreshold = 0.6, saltBuckets = 8)))
-    val selective = state(MinHash.mark(df, "id", "text",
-      MinHash.Config(verifyThreshold = 0.6, saltBuckets = 8,
-        hotBandThreshold = 4)))
-    assert(salted == unsalted,
-      "full salting changed the verified dedup state")
-    assert(selective == unsalted,
-      "selective salting changed the verified dedup state")
-    // and the verified pass did bite (some near pair fell below 0.6)
-    // or at minimum the template cluster was found at all
-    assert(unsalted.exists(_._3), "no near-dups found in planted cluster")
   }
 
   test("stageDir commits signatures + clusters; a resumed run reuses them") {

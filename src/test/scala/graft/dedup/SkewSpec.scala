@@ -45,49 +45,6 @@ class SkewSpec extends SparkSpec {
       assert(giant.getLong(1) >= hot - 10,
         s"giant cluster not recovered: ${giant.getLong(1)} of $hot")
       edges.unpersist()
-
-      // salted variant: the EXACT same star edge set (member → group
-      // min), not merely the same components — the identity that makes
-      // candidate verification compose salt-invariantly
-      def edgeSet(e: org.apache.spark.sql.DataFrame): Set[(String, String)] =
-        e.select("src", "dst").as[(String, String)].collect().toSet
-      val unsaltedEdgeSet = edgeSet(MinHash.candidateEdges(sigs))
-      val saltedEdges = MinHash.candidateEdgesSalted(sigs, saltBuckets = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nSalted = saltedEdges.count()
-      assert(nSalted < 4L * n, s"salted edge explosion: $nSalted")
-      assert(edgeSet(saltedEdges) == unsaltedEdgeSet,
-        "salted join changed the candidate edge set")
-      def clusterSets(e: org.apache.spark.sql.DataFrame): Set[Set[String]] =
-        MinHash.clusters(e, driverMaxEdges = 0L)
-          .groupBy("cluster")
-          .agg(collect_set("id").as("ids"))
-          .collect()
-          .map(_.getSeq[String](1).toSet)
-          .toSet
-      val a = clusterSets(MinHash.candidateEdges(sigs))
-      val b = clusterSets(saltedEdges)
-      assert(a == b, "salted join changed connected components")
-      saltedEdges.unpersist()
-
-      // SELECTIVE salting: only hot band groups re-group with a salt key;
-      // same edge set and components as both other forms
-      val hotEdges = MinHash.candidateEdgesSaltedHot(sigs, saltBuckets = 8,
-        hotThreshold = 256L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nHot = hotEdges.count()
-      assert(nHot < 4L * n, s"selective-salt edge explosion: $nHot")
-      assert(edgeSet(hotEdges) == unsaltedEdgeSet,
-        "selective salting changed the candidate edge set")
-      assert(a == clusterSets(hotEdges),
-        "selective salting changed connected components")
-      hotEdges.unpersist()
-      // a threshold no group crosses falls back to exactly candidateEdges
-      val coldOnly = MinHash.candidateEdgesSaltedHot(sigs, saltBuckets = 8,
-        hotThreshold = 10L * n)
-      assert(coldOnly.orderBy("src", "dst").collect().toSeq ==
-        MinHash.candidateEdges(sigs).orderBy("src", "dst").collect().toSeq,
-        "all-cold selective salting must equal the unsalted edge set")
     } finally sigs.unpersist()
   }
 }
