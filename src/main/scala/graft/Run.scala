@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.TaskMetricsListener.inPhase
 import graft.pipeline.{CorpusPipeline, Lineage, Metrics, Synth}
 import graft.sources.CorpusIO
 
@@ -22,7 +23,7 @@ import graft.sources.CorpusIO
   *     [--cc-driver-max-edges <m>] [--url-blocklist <file>] \
   *     [--extract-html] [--url-dedup] [--span-dedup <w>] \
   *     [--substring-dedup <w>] [--frequent-lines <maxDocs>[,<minWords>]] \
-  *     [--dsir-target <dir> --dsir-keep <k>] \
+  *     [--dsir-target <dir> [--dsir-format <fmt>] --dsir-keep <k>] \
   *     [--bm25-terms <t1,t2,..> --bm25-keep <k>] \
   *     [--write-sigs <dir>] [--ref-sigs <dir>] [--task-metrics]
   *     [--shuffle-salt <s> [--sort-by-pos [<shards>]]] [--ppl-per-lang <n>]
@@ -125,130 +126,41 @@ object Run {
     xxhash64(concat_ws("\u0001",
       cols.map(c => coalesce(c.cast("string"), lit(""))): _*))
 
-  /** Cluster-level resource accounting for long runs (`--task-metrics`):
-    * one listener aggregating every task's shuffle/spill/GC/CPU totals
-    * into O(#pipeline-stages) driver state — the numbers an operator
-    * actually checks after a 10M+ doc run ("did anything spill? how much
-    * shuffled? WHICH STAGE owned the pathological task?"). Attribution:
-    * [[execute]] brackets each pipeline phase with `setJobGroup`, jobs
-    * record their group's stage ids at `onJobStart`, and task totals
-    * aggregate both run-wide and per group — the r4 listener was
-    * run-level only, which left the 10M stress's 792 s max task
-    * attributed by guesswork (VERDICT r4 #4). Listener-bus events are
-    * delivered on a single thread, but `synchronized` anyway: the read
-    * happens on the caller thread at JSON-assembly time.
-    */
-  private final class TaskMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private final class Agg {
-      var tasks, failed = 0L
-      var inputBytes, shuffleRead, shuffleWrite, memSpill, diskSpill = 0L
-      var cpuNs, runMs, gcMs, maxTaskMs, peakExecMem = 0L
-      def add(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks += 1
-        if (!t.taskInfo.successful) failed += 1
-        val m = t.taskMetrics
-        if (m != null) {
-          inputBytes += m.inputMetrics.bytesRead
-          shuffleRead += m.shuffleReadMetrics.totalBytesRead
-          shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-          memSpill += m.memoryBytesSpilled
-          diskSpill += m.diskBytesSpilled
-          cpuNs += m.executorCpuTime
-          runMs += m.executorRunTime
-          gcMs += m.jvmGCTime
-          maxTaskMs = math.max(maxTaskMs, m.executorRunTime)
-          peakExecMem = math.max(peakExecMem, m.peakExecutionMemory)
-        }
-      }
-      def json: String = {
-        def mb(b: Long) = b / (1024.0 * 1024.0)
-        f"""{"tasks":$tasks,"failed_tasks":$failed,"input_mb":${mb(inputBytes)}%.1f,"shuffle_read_mb":${mb(shuffleRead)}%.1f,"shuffle_write_mb":${mb(shuffleWrite)}%.1f,"mem_spill_mb":${mb(memSpill)}%.1f,"disk_spill_mb":${mb(diskSpill)}%.1f,"cpu_sec":${cpuNs / 1e9}%.1f,"run_sec":${runMs / 1e3}%.1f,"gc_sec":${gcMs / 1e3}%.1f,"max_task_sec":${maxTaskMs / 1e3}%.1f,"peak_exec_mem_mb":${mb(peakExecMem)}%.1f}"""
-      }
-    }
-    private val total = new Agg
-    private val byPhase =
-      scala.collection.mutable.LinkedHashMap.empty[String, Agg]
-    // stageId → phase name; bounded by the run's Spark-stage count and
-    // discarded with the listener on execute() return
-    private val stagePhase =
-      scala.collection.mutable.HashMap.empty[Int, String]
-    // top-N slowest tasks run-wide (r6 — the diagnostic the r5 verdict
-    // asked for: the per-phase aggregates name the PHASE of a 150 s max
-    // task but not the stage/shape; these rows do). Bounded at 5 entries
-    // of 6 longs — O(1) driver state.
-    private final case class TopTask(runMs: Long, stageId: Int,
-        phase: String, inputRecords: Long, srBytes: Long, swBytes: Long)
-    private val topTasks =
-      scala.collection.mutable.ArrayBuffer.empty[TopTask]
-    private val TopN = 5
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      synchronized {
-        val g = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("other")
-        j.stageIds.foreach(sid => stagePhase(sid) = g)
-      }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized {
-        total.add(t)
-        val phase = stagePhase.getOrElse(t.stageId, "other")
-        byPhase.getOrElseUpdate(phase, new Agg).add(t)
-        val m = t.taskMetrics
-        if (m != null &&
-            (topTasks.size < TopN || m.executorRunTime > topTasks.last.runMs)) {
-          topTasks += TopTask(m.executorRunTime, t.stageId, phase,
-            m.inputMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten)
-          val sorted = topTasks.sortBy(-_.runMs).take(TopN)
-          topTasks.clear(); topTasks ++= sorted
-        }
-      }
-    def taskCount: Long = synchronized(total.tasks)
-    def json: String = synchronized {
-      val phases = byPhase.map { case (g, a) => s""""$g":${a.json}""" }
-        .mkString(",")
-      def mb(b: Long) = b / (1024.0 * 1024.0)
-      val top = topTasks.map(tt =>
-        f"""{"stage":${tt.stageId},"phase":"${tt.phase}","sec":${tt.runMs / 1e3}%.1f,"input_records":${tt.inputRecords},"shuffle_read_mb":${mb(tt.srBytes)}%.1f,"shuffle_write_mb":${mb(tt.swBytes)}%.1f}""")
-        .mkString("[", ",", "]")
-      s"""${total.json.dropRight(1)},"top_tasks":$top,"by_stage":{$phases}}"""
-    }
-  }
+  private val BooleanFlags = Set("lineage", "no-minhash", "no-exact",
+    "extract-html", "url-dedup", "task-metrics", "pii-extended", "signals",
+    "fix-mojibake", "keep-latest", "robots-respect", "datasheet",
+    "export-ordered")
 
-  /** Bracket a pipeline phase for task attribution: every Spark job
-    * submitted (from this thread) while `f` runs carries `name` as its
-    * job group, which the `--task-metrics` listener keys its per-phase
-    * aggregates on — and the Spark UI shows as the job description.
-    * Lazy frames escaping `f` attribute their DEFERRED compute to the
-    * phase that finally forces them (usually `sink`) — attribution
-    * follows execution, which is the honest reading.
+  /** Every flag [[execute]] reads. [[parseArgs]] rejects any other, so a
+    * misspelled or retired flag fails at argv time instead of running on
+    * defaults.
     */
-  private def inPhase[T](spark: SparkSession, name: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(name, s"graft:$name")
-    try f finally sc.clearJobGroup()
-  }
+  private[graft] val KnownFlags: Set[String] = BooleanFlags ++ Set(
+    "bloom", "bloom-ndv", "bm25-keep", "bm25-terms", "buckets-per-commit",
+    "cc-driver-max-edges", "compact-target", "dsir-format", "dsir-keep",
+    "dsir-target", "export-shards", "export-tokens", "export-vocab",
+    "format", "frequent-lines", "input", "keep-where", "minhash-verify",
+    "out-compression", "out-format", "output", "ppl-buckets", "ppl-corpus",
+    "ppl-keep", "ppl-per-lang", "ref-sigs", "repartition", "robots-agent",
+    "robots-txt", "semdedup", "shuffle-salt", "skip-index", "sort-by-pos",
+    "span-dedup", "substring-dedup", "synth", "url-blocklist", "write-sigs")
 
   private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
-      args(i) match {
-        case f @ ("--lineage" | "--no-minhash" | "--no-exact"
-            | "--extract-html" | "--url-dedup" | "--task-metrics"
-            | "--pii-extended" | "--signals" | "--fix-mojibake"
-            | "--keep-latest" | "--robots-respect" | "--datasheet"
-            | "--export-ordered") =>
+      val f = args(i)
+      if (f.startsWith("--") && !KnownFlags(f.drop(2)))
+        throw new IllegalArgumentException(s"unknown flag $f")
+      f match {
+        case _ if f.startsWith("--") && BooleanFlags(f.drop(2)) =>
           m(f.drop(2)) = "true"; i += 1
         // optional-value flag: bare `--sort-by-pos` must not swallow the
         // next `--flag` as its shard count
-        case f @ "--sort-by-pos"
+        case "--sort-by-pos"
             if i + 1 >= args.length || args(i + 1).startsWith("--") =>
           m(f.drop(2)) = "true"; i += 1
-        case f if f.startsWith("--") && i + 1 < args.length =>
+        case _ if f.startsWith("--") && i + 1 < args.length =>
           m(f.drop(2)) = args(i + 1); i += 2
         case other =>
           System.err.println(s"[run] ignoring arg: $other"); i += 1
@@ -1298,23 +1210,8 @@ object Run {
     val kept = byStage.collectFirst { case ("kept", n) => n }.getOrElse(0L)
     val total = byStage.map(_._2).sum
     val stagesJson = byStage.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    // listener-bus delivery is async and the drain API is private[spark]:
-    // poll until the task counter stops moving (all actions above have
-    // completed, so the bus only has a bounded tail to deliver). The poll
-    // is deadline-bounded: a stalled bus (or a concurrently scheduled job
-    // on a shared session) must degrade to best-effort totals, not spin
-    // the summary forever; 50 ms ticks keep the happy-path overhead to
-    // one tick instead of the old 2×200 ms.
     val tmJson = taskMetrics.map { l =>
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var prev = -1L
-      var stable = 0
-      while (stable < 2 && System.nanoTime() < deadline) {
-        val cur = l.taskCount
-        if (cur == prev) stable += 1 else stable = 0
-        prev = cur
-        if (stable < 2) Thread.sleep(50)
-      }
+      l.settle()
       s""","task_metrics":${l.json}"""
     }.getOrElse("")
     f"""{"docs_in":$total,"kept":$kept,"wall_sec":$wall%.1f,"docs_per_sec":${total / wall}%.0f,"partitions":${metrics.partitionsProcessed.value},"skew_factor":${metrics.skewFactor}%.2f,"stages":{$stagesJson}$exportJson$compactJson$tmJson}"""

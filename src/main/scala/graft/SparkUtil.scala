@@ -51,31 +51,20 @@ object SparkUtil {
   }
 
   /** Run `action` and return (its result, records read from sources
-    * during it) via task `inputMetrics`. Listener delivery is async, so
-    * after the action the counter is polled until stable, bounded by a
-    * deadline (same drain discipline as Run's `--task-metrics` summary).
-    * The listener is scoped: registered before, removed after — callers
-    * must not run concurrent jobs on the session during measurement.
-    * Shared by SkipIndexBench and the pruning/resume specs.
+    * during it) via task `inputMetrics`, drained the way Run's
+    * `--task-metrics` summary is ([[TaskMetricsListener.settle]]). The
+    * listener is scoped: registered before, removed after — callers must
+    * not run concurrent jobs on the session during measurement. Shared by
+    * the `Probe e2e skipindex` target and the pruning/resume specs.
     */
   def measureRecordsRead[T](spark: org.apache.spark.sql.SparkSession)
                            (action: => T): (T, Long) = {
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
+    val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = action
-      var last = -1L
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (read.get() != last && System.nanoTime() < deadline) {
-        last = read.get(); Thread.sleep(100)
-      }
-      (r, read.get())
+      listener.settle()
+      (r, listener.totals.input_records)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

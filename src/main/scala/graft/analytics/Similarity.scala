@@ -411,7 +411,8 @@ object Similarity {
     * factor). The earlier declarative form — `greatest` over nCells
     * `struct(cosine, cell)` columns of higher-order-function aggregates —
     * was measured 40× slower at 1M×64×128 (334 s vs 8 s index build,
-    * AnnBench): an nCells-wide expression tree re-derives the row norm
+    * the `index_build` part of `Probe e2e ann`): an nCells-wide
+    * expression tree re-derives the row norm
     * per centroid and defeats codegen at this width. Exact cosine ties
     * resolve to the LOWEST cell index, deterministically.
     */
@@ -458,8 +459,9 @@ object Similarity {
     * nProbe cells only. Without the prebuilt column the per-row
     * nCells-cosine assignment runs inline, which costs MORE than one
     * brute-force scan — fine for one-off queries on small tables, wrong
-    * for repeated queries (AnnBench measured 155 s inline vs 0.5 s
-    * prebuilt at 1M×64 — the index build is the point of IVF).
+    * for repeated queries (measured 155 s inline vs 0.5 s prebuilt at
+    * 1M×64; the `probe` part of `Probe e2e ann` times the prebuilt path
+    * — the index build is the point of IVF).
     */
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
               query: Array[Double], k: Int,

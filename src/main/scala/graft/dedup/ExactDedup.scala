@@ -39,6 +39,27 @@ object ExactDedup {
     df.withColumn("is_exact_dup", row_number().over(w) > 1)
   }
 
+  /** One narrow aggregation proving `idCol` is a NON-NULL UNIQUE key of
+    * `df`: total count == non-null count == distinct count. The single
+    * definition of the uniqueness gate behind [[markById]],
+    * [[keepLatestById]] and `CorpusPipeline.dedup` — shared so the
+    * sites can never drift. Eager (runs a job); persist `df` first.
+    */
+  def idIsUniqueKey(df: DataFrame, idCol: String): Boolean = {
+    // r6: single groupBy instead of count+countDistinct — the distinct
+    // aggregate planned an Expand (2× rows through the exchange) plus an
+    // extra aggregate phase. "non-null unique key" ⟺ no null ids AND
+    // every id group is a singleton, which one keyed aggregation answers
+    // with map-side combining and half the shuffle bytes.
+    val u = df.select(col(idCol).as("__id"))
+      .groupBy("__id").agg(count(lit(1)).as("c"))
+      .agg(coalesce(max(col("c")), lit(1L)).as("mx"), // empty: trivially unique
+        coalesce(sum(when(col("__id").isNull, col("c")).otherwise(lit(0L))),
+          lit(0L)).as("nulls"))
+      .head()
+    u.getLong(0) == 1L && u.getLong(1) == 0L
+  }
+
   /** [[mark]] for rows with a unique id column, shuffling only a narrow
     * projection: the keep-first window runs over (id, content-hash,
     * order-cols) — ~100 B/row instead of the full page (~1.3 KB with
@@ -62,27 +83,6 @@ object ExactDedup {
     * the check entirely; `Some(false)` routes straight to the windowed
     * mark.
     */
-  /** One narrow aggregation proving `idCol` is a NON-NULL UNIQUE key of
-    * `df`: total count == non-null count == distinct count. The single
-    * definition of the uniqueness gate behind [[markById]],
-    * [[keepLatestById]] and `CorpusPipeline.dedup` — shared so the
-    * sites can never drift. Eager (runs a job); persist `df` first.
-    */
-  def idIsUniqueKey(df: DataFrame, idCol: String): Boolean = {
-    // r6: single groupBy instead of count+countDistinct — the distinct
-    // aggregate planned an Expand (2× rows through the exchange) plus an
-    // extra aggregate phase. "non-null unique key" ⟺ no null ids AND
-    // every id group is a singleton, which one keyed aggregation answers
-    // with map-side combining and half the shuffle bytes.
-    val u = df.select(col(idCol).as("__id"))
-      .groupBy("__id").agg(count(lit(1)).as("c"))
-      .agg(coalesce(max(col("c")), lit(1L)).as("mx"), // empty: trivially unique
-        coalesce(sum(when(col("__id").isNull, col("c")).otherwise(lit(0L))),
-          lit(0L)).as("nulls"))
-      .head()
-    u.getLong(0) == 1L && u.getLong(1) == 0L
-  }
-
   def markById(df: DataFrame, dupCols: Seq[String], orderCols: Seq[String],
                idCol: String,
                idIsUnique: Option[Boolean] = None): DataFrame = {
@@ -133,7 +133,7 @@ object ExactDedup {
     * partitions (snapshot-bucketed or url-clustered inputs); on a
     * randomly-distributed crawl the full payload rides the aggregation
     * hash table for nothing (measured ~4× slower than even the window
-    * sort at 10M×512 B — RevisitBench, BENCH.md), so rows with a unique
+    * sort at 10M×512 B — `Probe e2e revisit`, BENCH.md), so rows with a unique
     * id should prefer [[keepLatestById]], the narrow-agg + join-back
     * form that moves corpus-width data through exactly one AQE-planned
     * exchange.
@@ -185,7 +185,7 @@ object ExactDedup {
     * table, and map-side combine only helps when a url's revisions
     * co-reside in map partitions — on a randomly-distributed crawl they
     * don't (measured at 10M×512 B: the wide `max_by` is ~4× SLOWER than
-    * even the window sort; RevisitBench / BENCH.md). This form instead
+    * even the window sort; `Probe e2e revisit` / BENCH.md). This form instead
     * aggregates a NARROW projection — (key, ord, id), ~60 B/row — to one
     * winning id per key, then inner-joins the winner-id set back to the
     * full rows: the corpus-width data crosses the exchange exactly once

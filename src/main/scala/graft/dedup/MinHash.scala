@@ -579,31 +579,13 @@ object MinHash {
         }
       if (rows.length <= cap) {
         e.unpersist(false)
-        if (rows.isEmpty)
-          return CcResult(e.sparkSession.createDataFrame(
-            e.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id",
-                e.schema("src").dataType),
-              org.apache.spark.sql.types.StructField("cluster",
-                e.schema("src").dataType)))), 0, Some(0L))
-        val (out, n) =
-          if (srcType == org.apache.spark.sql.types.StringType)
-            driverUnionFind(e.sparkSession, rows)
-          else driverUnionFindLong(e.sparkSession, rows)
-        return CcResult(out, 0, Some(n))
+        return driverUnionFind(e.sparkSession, rows, srcType)
       }
     }
     val nEdges = e.count()
     if (nEdges == 0) {
       e.unpersist(false)
-      return CcResult(e.sparkSession.createDataFrame(
-        e.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            e.schema("src").dataType),
-          org.apache.spark.sql.types.StructField("cluster",
-            e.schema("src").dataType)))), 0, Some(0L))
+      return driverUnionFind(e.sparkSession, Array.empty, srcType)
     }
     val vertices = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -660,18 +642,28 @@ object MinHash {
   }
 
   /** Path-compressed union-find over a collected edge list (small-graph
-    * fast path). Representative = lexicographic min of the component,
-    * matching the distributed loop bit-for-bit. Takes the already-
+    * fast path), for string or long ids. Representative = the component
+    * min in the id type's own order (lexicographic for strings, numeric
+    * for longs) — exactly what the distributed loop's `min(lbl)`
+    * computes, so the two paths agree bit-for-bit. Takes the already-
     * collected rows (the caller's path-decision collect doubles as the
-    * edge fetch) and returns the label frame plus its size, known
-    * driver-side for free.
+    * edge fetch) and returns the label frame with its size, known
+    * driver-side for free; no rows give an empty frame of the same
+    * schema.
     */
   private def driverUnionFind(spark: SparkSession,
-                              rows: Array[org.apache.spark.sql.Row])
-      : (DataFrame, Long) = {
-    import scala.collection.mutable
-    val parent = mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
+                              rows: Array[org.apache.spark.sql.Row],
+                              idType: org.apache.spark.sql.types.DataType)
+      : CcResult = {
+    import org.apache.spark.sql.types._
+    lazy val ord = (idType match {
+      case StringType => Ordering.String
+      case LongType => Ordering.Long
+      case t => throw new IllegalArgumentException(
+        s"driver union-find needs string or long ids, got $t")
+    }).asInstanceOf[Ordering[Any]]
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent(r)
       var c = x
@@ -679,51 +671,19 @@ object MinHash {
       r
     }
     rows.foreach { row =>
-      val (a, b) = (row.getString(0), row.getString(1))
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      } else { parent.getOrElseUpdate(a, ra); () }
-      parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-      ()
-    }
-    val pairs = parent.keysIterator.map(v => (v, find(v))).toSeq
-    import spark.implicits._
-    (pairs.toDF("id", "cluster"), pairs.size.toLong)
-  }
-
-  /** [[driverUnionFind]] for LONG ids (r6): representative = NUMERIC min
-    * of the component — exactly what the distributed loop's `min(lbl)`
-    * computes over a LongType label column, so the two paths stay
-    * bit-identical for numeric ids the way they always were for strings.
-    * Before this, long-id inputs (`doc_id` corpora) paid the full
-    * distributed CC loop (~18 driver actions) for even a few hundred
-    * edges.
-    */
-  private def driverUnionFindLong(spark: SparkSession,
-                                  rows: Array[org.apache.spark.sql.Row])
-      : (DataFrame, Long) = {
-    import scala.collection.mutable
-    val parent = mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
-    rows.foreach { row =>
-      val a = row.getLong(0); val b = row.getLong(1)
+      val a = row.get(0); val b = row.get(1)
       val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      } else { parent.getOrElseUpdate(a, ra); () }
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
       parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
       ()
     }
-    val pairs = parent.keysIterator.map(v => (v, find(v))).toSeq
-    import spark.implicits._
-    (pairs.toDF("id", "cluster"), pairs.size.toLong)
+    val labels = parent.keysIterator
+      .map(v => org.apache.spark.sql.Row(v, find(v))).toSeq
+    val schema = StructType(Seq(
+      StructField("id", idType), StructField("cluster", idType)))
+    import scala.jdk.CollectionConverters._
+    CcResult(spark.createDataFrame(labels.asJava, schema), 0,
+      Some(labels.size.toLong))
   }
 
   /** Ids to drop: every clustered node except its component representative
@@ -733,9 +693,6 @@ object MinHash {
   def removeIds(cl: DataFrame): DataFrame =
     cl.filter(col("id") =!= col("cluster")).select("id")
 
-  /** End-to-end: mark near-duplicate non-representatives in `df`.
-    * Adds `is_near_dup` and `minhash_cluster` (null for unclustered docs).
-    */
   /** Cluster maps up to this many rows get an explicit broadcast hint for
     * the final mark join: the map is O(duplicates) — tiny next to the
     * corpus — but often just over AQE's 10 MB auto-broadcast threshold,
@@ -756,19 +713,18 @@ object MinHash {
                               (compute: => DataFrame): DataFrame = {
     val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
-      val df = compute
-      // a zero-partition frame (e.g. an empty cluster map) writes no
-      // part files, only _SUCCESS — the read-back would then fail to
-      // infer a schema; force one (empty) schema-bearing file
-      val writable =
-        if (df.rdd.getNumPartitions == 0) df.repartition(1) else df
-      writable.write.mode("overwrite").parquet(path)
-    }
+    // a zero-partition frame (e.g. an empty cluster map) still gets one
+    // schema-bearing file: Spark's file writer gives such an input one
+    // empty write task, so the read-back can infer the schema
+    if (!fs.exists(success))
+      compute.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
 
-  /** `stageDir`: optional dedup-phase resume directory. When set, the
+  /** End-to-end: mark near-duplicate non-representatives in `df`.
+    * Adds `is_near_dup` and `minhash_cluster` (null for unclustered docs).
+    *
+    * `stageDir`: optional dedup-phase resume directory. When set, the
     * signature table and the cluster map — the two expensive
     * intermediates of the near-dup flow — are committed as parquet
     * under it ([[committed]]); a re-run over the SAME input picks them

@@ -202,7 +202,8 @@ object Heuristics {
     // equality probe replaces the second stats pass entirely; when it
     // DID rewrite, FineWeb reads only four line-level fields, so a
     // line-level-only pass (no n-gram maps — the bulk of compute's
-    // 36 µs/doc, ProfileBench) replaces the full recompute
+    // 36 µs/doc, `Probe kernel heuristics_analyze`) replaces the full
+    // recompute
     val c4Identity = c4Text == t
     val (fwDrop, c4Words) =
       if (c4Identity) (fineWeb(st, cfg), st.nWords)

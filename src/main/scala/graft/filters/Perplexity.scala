@@ -388,7 +388,7 @@ object KneserNeyLM {
     // not shuffle volume (Tungsten's partial hash-agg already dedups
     // map-side): emitting a Tuple2 per token costs a tuple + two
     // UTF8String row conversions per OCCURRENCE, and the 8M-doc
-    // LmBench measured exactly that allocation churn as the 32-thread
+    // `Probe e2e lm` measured exactly that allocation churn as the 32-thread
     // scaling ceiling (0.68, BENCH.md). Counting into a two-level
     // java.util.HashMap with a long[1] cell makes the steady-state
     // per-token cost two map probes and zero allocations; each

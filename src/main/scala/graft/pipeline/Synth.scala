@@ -130,7 +130,7 @@ object Synth {
     * Streamed into `sb` (r6): the original Array.fill + mkString + "."
     * form allocated a word array, a joined string and a re-copied final
     * string per sentence — at 32 executor threads the generator's
-    * allocation churn measured 121 µs·core/doc (ProfileBench synth_row),
+    * allocation churn measured 121 µs·core/doc (`Probe kernel synth_row`),
     * a visible slice of every filterScrub lap. The rng call sequence
     * (one nextInt(7) + n vocab picks) and the emitted characters are
     * IDENTICAL: picks at word slots 1/3/5 are still drawn and then

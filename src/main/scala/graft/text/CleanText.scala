@@ -33,7 +33,7 @@ object CleanText {
     * ≤4-words → empty — fused into ONE linear char scan. Semantics are
     * regex-identical (property-pinned against [[scrubReference]]): the
     * fusion exists because java.util.regex collapses under executor
-    * thread counts — ProfileBench measured the three-`replaceAllIn`
+    * thread counts — `Probe kernel clean_regex_chain` measured the three-`replaceAllIn`
     * chain at 50 µs/doc single-threaded but 3,261 µs·core/doc at 32
     * threads (65×, the same megamorphic-profile pathology the KN
     * tokenizer's hand-rolled loop replaced), while this scan scales like

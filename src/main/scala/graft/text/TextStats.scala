@@ -449,7 +449,8 @@ object TextStats {
     // skipped. Words are non-empty, so any repeat yields a nonzero frac
     // (the implication is an equivalence, not just one-way). On clean
     // body text (no repetition — the common case) this cuts the nine
-    // n-gram passes to two, which ProfileBench measured as the dominant
+    // n-gram passes to two, which `Probe kernel textstats_compute`
+    // measured as the dominant
     // allocation pressure in compute at 32 threads (161 µs·core/doc,
     // 3.9× thread inflation).
     val top2 = topNgramCharFrac(wl, hs, 2, totWordChars)

@@ -624,6 +624,47 @@ class MinHashSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "clusters_v0.5", "_SUCCESS")))
   }
 
+  test("committing a shuffled frame runs its stages once") {
+    // asking a shuffled frame for its partition count under AQE runs its
+    // shuffle stages, and the write then runs them again
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobsIn(group: String)(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => jobs.incrementAndGet()
+            case Some(g) if g == s"$group-marker" => markerSeen.countDown()
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try f finally sc.clearJobGroup()
+        sc.setJobGroup(s"$group-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        jobs.get
+      } finally sc.removeSparkListener(listener)
+    }
+    val frame = (0 until 200).map(i => (i % 7, s"d$i")).toDF("k", "v")
+      .repartition(4).groupBy("k").count()
+    val dir = java.nio.file.Files.createTempDirectory("mh_commit").toString
+    val plain = jobsIn("plain-write") {
+      frame.write.parquet(s"$dir/plain"); spark.read.parquet(s"$dir/plain")
+      ()
+    }
+    val viaCommit = jobsIn("committed-write") {
+      MinHash.committed(spark, s"$dir/committed")(frame); ()
+    }
+    assert(viaCommit == plain,
+      s"committed ran $viaCommit jobs, a plain write + read-back $plain")
+    assert(spark.read.parquet(s"$dir/committed").count() == 7)
+  }
+
   test("markKeepBest keeps the highest-scoring cluster member") {
     val base = doc(30)
     val rows = Seq(
