@@ -284,7 +284,6 @@ object Probe {
       if (steps) {
         lap.part("scan")(scored.count())
         lap.part("scan_again")(scored.count())
-        lap.part("uniq_check")(ExactDedup.idIsUniqueKey(scored, "url"))
         val alive = scored.filter(col("drop_stage").isNull)
         lap.part("narrow_project")(
           alive.select("url", "warc_ts", "scrubbed_text").count())

@@ -32,9 +32,6 @@ object DomainStats {
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("domain"))
 
-  def urlCounts(df: DataFrame, urlCol: String): DataFrame =
-    df.groupBy(col(urlCol)).agg(count(lit(1)).as("cnt"))
-
   /** Ratio of per-domain counts between two frames, 0-denominator → null
     * (process_data.py:120-125 semantics). Broadcasts the smaller side.
     */

@@ -166,17 +166,6 @@ object Sampling {
       dom, cap, keyCols, seed).drop(dom)
   }
 
-  /** Histogram-bin stratified sample over a numeric column (the pd.cut
-    * path, utils.py:92-95): fixed-width bins become the strata.
-    */
-  def binQuota(df: DataFrame, numCol: String, binWidth: Double, quota: Int,
-               keyCols: Seq[String], seed: Long = 42L): DataFrame = {
-    val bin = fresh(df, "_bin")
-    val binned = df.withColumn(bin,
-      floor(col(numCol) / binWidth).cast("long"))
-    stratifiedQuota(binned, bin, quota, keyCols, seed).drop(bin)
-  }
-
   /** Token-budget cut — "give me exactly ≤ N training tokens": keep
     * documents, in deterministic `orderCol` order (tie-broken by
     * `tieCols`), while the RUNNING token total stays ≤ `budget`. The

@@ -41,9 +41,9 @@ object ExactDedup {
 
   /** One narrow aggregation proving `idCol` is a NON-NULL UNIQUE key of
     * `df`: total count == non-null count == distinct count. The single
-    * definition of the uniqueness gate behind [[markById]],
-    * [[keepLatestById]] and `CorpusPipeline.dedup` — shared so the
-    * sites can never drift. Eager (runs a job); persist `df` first.
+    * definition of the uniqueness gate behind [[markById]] and
+    * [[keepLatestById]] — shared so the sites can never drift. Eager
+    * (runs a job); persist `df` first.
     */
   def idIsUniqueKey(df: DataFrame, idCol: String): Boolean = {
     // r6: single groupBy instead of count+countDistinct — the distinct

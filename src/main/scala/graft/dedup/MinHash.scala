@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -217,12 +218,17 @@ object MinHash {
     * banding groupBy downstream.
     */
   def signatures(df: DataFrame, idCol: String, textCol: String,
-                 cfg: Config = Config()): DataFrame = {
-    val bandsUdf = udf((t: String) =>
-      if (t == null) null else bandHashesOf(t, cfg))
+                 cfg: Config = Config()): DataFrame =
     parallelized(df).select(col(idCol).as("id"),
-      posexplode(bandsUdf(col(textCol))).as(Seq("band_id", "band_hash")))
-  }
+      posexplode(bandHashes(cfg)(col(textCol))).as(Seq("band_id", "band_hash")))
+
+  /** [[bandHashesOf]] as a column function; null text gives null. */
+  private[graft] def bandHashes(cfg: Config): UserDefinedFunction =
+    udf((t: String) => if (t == null) null else bandHashesOf(t, cfg))
+
+  /** [[minVectorOf]] as a column function; null text gives null. */
+  private[graft] def minVectors(cfg: Config): UserDefinedFunction =
+    udf((t: String) => if (t == null) null else minVectorOf(t, cfg))
 
   /** Input-skew remedy for the per-doc hash passes (optimization guide
     * §2.5: "one huge unsplittable file … repartition immediately after
@@ -240,7 +246,7 @@ object MinHash {
     * exchange, whose planned width is read instead (0 = unknown: left
     * alone); `df.rdd` of any other plan is its scan splits, no job.
     */
-  private def parallelized(df: DataFrame): DataFrame = {
+  private[graft] def parallelized(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val par = df.sparkSession.sparkContext.defaultParallelism
     val splits = df.queryExecution.executedPlan match {
@@ -314,11 +320,9 @@ object MinHash {
     * verification-side companion of [[signatures]].
     */
   def sigVectors(df: DataFrame, idCol: String, textCol: String,
-                 cfg: Config = Config()): DataFrame = {
-    val vecUdf = udf((t: String) =>
-      if (t == null) null else minVectorOf(t, cfg))
-    parallelized(df).select(col(idCol).as("id"), vecUdf(col(textCol)).as("sig"))
-  }
+                 cfg: Config = Config()): DataFrame =
+    parallelized(df).select(col(idCol).as("id"),
+      minVectors(cfg)(col(textCol)).as("sig"))
 
   /** (id, band_id, band_hash) band table derived from an (id, sig)
     * vector table — the same per-row fold [[signatures]] computes from
@@ -562,21 +566,12 @@ object MinHash {
         (srcType == org.apache.spark.sql.types.StringType ||
           srcType == org.apache.spark.sql.types.LongType)) {
       val cap = math.min(driverMaxEdges, (Int.MaxValue - 2).toLong).toInt
-      // scoped conf: without it the limited collect walks Spark's take
-      // ladder (1 → 4 → 16 → … partitions, one sequential job each,
-      // since the limit is never reached in the common case); with all
-      // partitions in the first round it is ONE parallel job, the same
-      // shape as the count it replaces
-      val conf = e.sparkSession.conf
-      val key = "spark.sql.limit.initialNumPartitions"
-      val prev = conf.getOption(key)
-      conf.set(key, Int.MaxValue.toString)
-      val rows =
-        try e.limit(cap + 1).collect()
-        finally prev match {
-          case Some(v) => conf.set(key, v)
-          case None => conf.unset(key)
-        }
+      // ONE job over every partition, each sending at most cap + 1 rows:
+      // a `limit` collect walks Spark's take ladder (1 → 4 → 16 → …
+      // partitions, one sequential job each, since the limit is never
+      // reached in the common case), and widening its first round takes a
+      // session conf that other threads' jobs would see too
+      val rows = e.rdd.mapPartitions(_.take(cap + 1)).collect()
       if (rows.length <= cap) {
         e.unpersist(false)
         return driverUnionFind(e.sparkSession, rows, srcType)
@@ -686,13 +681,6 @@ object MinHash {
       Some(labels.size.toLong))
   }
 
-  /** Ids to drop: every clustered node except its component representative
-    * (the min id) — datatrove stage-3 remove_ids semantics
-    * (3-local:88-101 keeps one doc per cluster).
-    */
-  def removeIds(cl: DataFrame): DataFrame =
-    cl.filter(col("id") =!= col("cluster")).select("id")
-
   /** Cluster maps up to this many rows get an explicit broadcast hint for
     * the final mark join: the map is O(duplicates) — tiny next to the
     * corpus — but often just over AQE's 10 MB auto-broadcast threshold,
@@ -749,11 +737,9 @@ object MinHash {
 
   /** The (id, cluster) map behind [[mark]] — every clustered doc with its
     * component-min representative — plus its row count when known
-    * driver-side for free (union-find fast path). Exposed (r6) so callers
-    * that only need the verdict columns (CorpusPipeline's single-pass
-    * dedup) can join this O(duplicates) table directly instead of going
-    * through [[mark]]'s full-frame join and re-executing their input
-    * subtree a second time.
+    * driver-side for free (union-find fast path), computed from text.
+    * Callers that already hold band hashes (CorpusPipeline's key table)
+    * call [[clustersOf]] directly.
     */
   def clusterTable(df: DataFrame, idCol: String, textCol: String,
                    cfg: Config = Config(), stageDir: Option[String] = None)
@@ -796,6 +782,28 @@ object MinHash {
           .transform(graft.SparkUtil.materialize)
       }
     }
+    // finally: the corpus-sized signature checkpoints are released
+    // EXPLICITLY once the cluster map exists (or the computation failed)
+    // — waiting for the ContextCleaner's weak-ref GC left multi-GB
+    // blocks occupying unified storage memory through the remaining
+    // pipeline phases on the 10M capstone.
+    try clustersOf(sigs, vecs, cfg, stageDir)
+    finally {
+      graft.SparkUtil.release(sigs)
+      vecs.foreach(graft.SparkUtil.release)
+    }
+  }
+
+  /** The band-join / connected-components half of [[clusterTable]]:
+    * the (id, cluster) map and its known size from a precomputed
+    * (id, band_id, band_hash) table and, under verification, the
+    * (id, sig) vector table it was folded from. Both are read more than
+    * once, so pass tables whose expensive part is already materialized.
+    * With a `stageDir` the cluster map is committed under it.
+    */
+  def clustersOf(sigs: DataFrame, vecs: Option[DataFrame], cfg: Config,
+                 stageDir: Option[String])
+                (implicit spark: SparkSession): (DataFrame, Option[Long]) = {
     def computeClusters(): CcResult = {
       val edges0 = candidateEdges(sigs)
       val edges = vecs match {
@@ -808,45 +816,31 @@ object MinHash {
     // materialize, NOT persist: the returned frame references cl, so a
     // persist here could never be unpersisted inline and leaked one
     // CacheManager entry per mark() call on a long-lived session — the
-    // exact trap NearDup.simhashPairs documents. The cluster map is
-    // O(duplicates)-sized and is counted below anyway, so the eager
-    // checkpoint costs nothing extra.
+    // exact trap NearDup.simhashPairs documents.
     // The committed cluster dir encodes the VERIFICATION config: a
     // resume that flips --minhash-verify on/off (or moves the
     // threshold) must recompute clusters — reusing an any-shared-band
     // cluster map under verified semantics (or vice versa) would make
-    // the flag a silent no-op. The signature intermediates are already
-    // mode-split ($d/signatures vs $d/sig_vectors) and stay reusable.
+    // the flag a silent no-op.
     val clustersLeaf =
       if (cfg.verifyThreshold > 0.0) s"clusters_v${cfg.verifyThreshold}"
       else "clusters"
-    // r6: the union-find fast path returns a LocalRelation it just built
-    // on the driver (localSize known) — checkpointing it would launch a
+    // the union-find fast path returns a LocalRelation it just built on
+    // the driver (localSize known) — checkpointing it would launch a
     // job to re-materialize data that is already local, and counting it
-    // for the broadcast decision another; both are skipped. The
-    // distributed path keeps the materialize exactly as before.
-    // finally: the corpus-sized signature checkpoints are released
-    // EXPLICITLY once the cluster map exists (or the computation failed)
-    // — waiting for the ContextCleaner's weak-ref GC left multi-GB
-    // blocks occupying unified storage memory through the remaining
-    // pipeline phases on the 10M capstone.
-    val (cl, clSize): (DataFrame, Option[Long]) =
-      try stageDir match {
-        case Some(d) =>
-          (committed(spark, s"$d/$clustersLeaf")(computeClusters().labels),
-            None)
-        case None =>
-          val res = computeClusters()
-          res.localSize match {
-            case s @ Some(_) => (res.labels, s)
-            case None =>
-              (res.labels.transform(graft.SparkUtil.materialize), None)
-          }
-      } finally {
-        graft.SparkUtil.release(sigs)
-        vecs.foreach(graft.SparkUtil.release)
-      }
-    (cl, clSize)
+    // for the broadcast decision another; both are skipped.
+    stageDir match {
+      case Some(d) =>
+        (committed(spark, s"$d/$clustersLeaf")(computeClusters().labels),
+          None)
+      case None =>
+        val res = computeClusters()
+        res.localSize match {
+          case s @ Some(_) => (res.labels, s)
+          case None =>
+            (res.labels.transform(graft.SparkUtil.materialize), None)
+        }
+    }
   }
 
   /** Quality-aware representative selection: like [[mark]], but each

@@ -43,14 +43,6 @@ class KneserNeyLM(
         discount * n1p / c1 * pCont(w2)
     }
 
-  /** log2 P_KN(w2 | w1), with unknown-context backoff to Pcont. */
-  def logProb(w1: String, w2: String): Double = {
-    val p = prob(unigram.getOrElse(w1, 0L),
-      bigramByW1.getOrElse(w1, null),
-      contLeft.getOrElse(w1, 0), w2)
-    math.log(math.max(p, 1e-12)) / Log2
-  }
-
   /** Lowercased [a-z0-9'] token stream. Equivalent to
     * `text.toLowerCase(Locale.ROOT).split("[^a-z0-9']+")` — hand-rolled
     * because `java.util.regex` with lambda-compiled char predicates ran

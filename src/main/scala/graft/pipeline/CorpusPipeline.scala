@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{ExactDedup, MinHash}
@@ -273,17 +274,30 @@ object CorpusPipeline {
     * bytes. Early-dropped rows pass through untouched (their exclusion
     * columns null), mirroring the reference's per-stage exclusion sinks.
     *
-    * Plan shape (round 5): with a UNIQUE id column — the flagship case;
-    * one cheap narrow aggregation verifies it — both dedup stages compute
-    * their mark tables from NARROW (url, warc_ts, scrubbed_text)
-    * projections and the final result is ONE pass over the scored frame
-    * with two O(duplicates) left joins. The r4 union-of-filtered-branches
-    * form decoded the uncompressed scored cache three times at sink (the
-    * 10M-doc stress attributed 65 GB of input and 17% executor GC mostly
-    * to those re-reads) and evaluated the exact-dup join twice. Recurring
-    * ids (raw multi-snapshot crawls without `--url-dedup`) fall back to
-    * the windowed branch form, which is correct for any input. Both
-    * paths are output-identical (PipelineE2ESpec parity pin).
+    * Plan shape: one route for any input.
+    *  1. Every scored row gets a positional key, `_row`.
+    *  2. One narrow key table over the alive rows, built in one scan of
+    *     the text and materialized once (committed under
+    *     `cfg.dedupStageDir` instead, when set): `_row`, `url`, the band
+    *     hashes (the min-hash vector under verification) and a keep-first
+    *     flag from a window over the content hash, ordered by
+    *     (warc_ts, url).
+    *  3. Exact verdicts are the non-first rows. Near-dup verdicts come
+    *     from the first rows' bands (every alive row with exact dedup
+    *     off) through [[MinHash.clustersOf]], joined back to those rows
+    *     by url.
+    *  4. One verdict table keyed by `_row`, joined once to the scored
+    *     frame: the only full-width pass.
+    * Verdicts are keyed by position, not by url: a url may recur (raw
+    * multi-snapshot crawls without `--url-dedup`), and of several
+    * byte-identical records exactly one must be kept.
+    *
+    * `scored` is read twice (key table, final pass) and must give the
+    * same rows in the same partitions both times: pass a materialized
+    * frame, as `run`, `graft.Run` and `graft.Probe` do. A committed key
+    * table holds only for the scored input read back with the same
+    * partitioning; a verdict that lands on a row with another url fails
+    * the final pass instead of marking the wrong document.
     */
   def dedup(scored: DataFrame, cfg: PipelineConfig = PipelineConfig()): DataFrame = {
     implicit val spark: SparkSession = scored.sparkSession
@@ -292,181 +306,97 @@ object CorpusPipeline {
         .withColumn("minhash_cluster", lit(null).cast("string"))
         .withColumn("keep", col("drop_stage").isNull)
         .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
-    // the same uniqueness gate markById runs, hoisted so one check
-    // serves both stages AND the single-pass join-back below (a dead row
-    // sharing a url with an alive duplicate must never inherit its mark).
-    // r6: the exact-dup window subtree does not depend on the gate's
-    // OUTCOME (it computes content-keyed dup ids either way; only the
-    // id join-back needs uniqueness), so its materialization runs on a
-    // second thread WHILE the gate aggregation runs — Spark schedules
-    // concurrent jobs FIFO and the second job back-fills the first's
-    // tail (optimization guide §2.6). On the rare non-unique route the
-    // speculative table is simply discarded (checkpoint blocks are
-    // ContextCleaner-managed); its failure, if any, is ignored there
-    // because the windowed fallback recomputes from scratch anyway.
-    val specX: Option[java.util.concurrent.FutureTask[(DataFrame, Long)]] =
-      if (cfg.exactDedup) {
-        val task = new java.util.concurrent.FutureTask(
-          () => exactDupIdsTable(scored))
-        val th = new Thread(task, "graft-dedup-exact-spec")
-        th.setDaemon(true)
-        th.start()
-        Some(task)
-      } else None
-    val unique =
-      try graft.dedup.ExactDedup.idIsUniqueKey(scored, "url")
-      catch { case t: Throwable =>
-        specX.foreach(f => try f.get() catch { case _: Throwable => () })
-        throw t
-      }
-    if (unique)
-      dedupById(scored, cfg,
-        specX.map(f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause // surface the real Spark failure, not the wrapper
-          }))
-    else {
-      specX.foreach(f => try f.get() catch { case _: Throwable => () })
-      dedupByWindow(scored, cfg)
+    val mh = minhashConfig(cfg)
+    val verify = mh.verifyThreshold > 0.0
+    val keyed = scored.withColumn("_row", monotonically_increasing_id())
+    val text = col("scrubbed_text")
+    val hashes = Seq(
+      Option.when(cfg.exactDedup)(ExactDedup.key(Seq(text)).as("_k")),
+      Option.when(cfg.minhashDedup)(
+        if (verify) MinHash.minVectors(mh)(text).as("sig")
+        else MinHash.bandHashes(mh)(text).as("bands"))).flatten
+    // _row is assigned before parallelized()'s repartition, which only
+    // moves the narrow projection the hash UDF reads
+    val hashed = MinHash.parallelized(keyed.filter(col("drop_stage").isNull)
+        .select("_row", "url", "warc_ts", "scrubbed_text"))
+      .select(Seq(col("_row"), col("url"), col("warc_ts")) ++ hashes: _*)
+    val table =
+      if (!cfg.exactDedup) hashed.drop("warc_ts")
+      else hashed
+        // the window's exchange at a fixed width: AQE would coalesce this
+        // narrow table to a task or two, and every dedup stage after it
+        // (band join, verdicts) would read it at that width
+        .repartition(spark.sparkContext.defaultParallelism, col("_k"))
+        .withColumn("first", row_number().over(Window.partitionBy("_k")
+          .orderBy("warc_ts", "url")) === 1)
+        .drop("warc_ts", "_k")
+    val keys = cfg.dedupStageDir match {
+      // the leaf names the table's columns, so a resume with other dedup
+      // flags (or a dir from before the key table) is never misread
+      case Some(d) => MinHash.committed(spark,
+        s"$d/${("keys" +: table.columns.drop(2)).mkString("-")}")(table)
+      case None => table.transform(graft.SparkUtil.materialize)
     }
-  }
-
-  /** The exact keep-first dup-id table over the alive rows of `scored`:
-    * (url) of every non-first member of a content-hash group, with its
-    * count — ~100 B/row through the window shuffle, never the text.
-    * MATERIALIZED (r6): two consumers (the near-dup stage's anti-join
-    * gate and the final verdict join), and the known count drives the
-    * broadcast hint in [[dedupById]].
-    */
-  private def exactDupIdsTable(scored: DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(col("warc_ts"), col("url"))
-    val x = scored.filter(col("drop_stage").isNull)
-      .select(col("url"), col("warc_ts"),
-        ExactDedup.key(Seq(col("scrubbed_text"))).as("_k"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") > 1)
-      .select(col("url").as("_xd_id"))
-      .transform(graft.SparkUtil.materialize)
-    (x, x.count())
-  }
-
-  /** Single-sink-pass dedup for unique ids: narrow mark tables, one
-    * full-width pass, two left joins (AQE broadcasts them at real dup
-    * fractions; MinHash.mark's own cluster join-back has the explicit
-    * `BroadcastClustersMaxRows` gate).
-    */
-  private[graft] def dedupById(scored: DataFrame, cfg: PipelineConfig,
-                               precomputedX: Option[(DataFrame, Long)] = None)
-                       (implicit spark: SparkSession): DataFrame = {
-    val aliveN = scored.filter(col("drop_stage").isNull)
-      .select(col("url"), col("warc_ts"), col("scrubbed_text"))
-    // exact keep-first dup ids ([[exactDupIdsTable]]) — normally handed
-    // in by [[dedup]], which materialized them concurrently with the
-    // uniqueness gate; computed here only when called directly (tests).
-    val exactDupIds: Option[(DataFrame, Long)] =
-      if (!cfg.exactDedup) None
-      else precomputedX.orElse(Some(exactDupIdsTable(scored)))
-    val stillAliveN = exactDupIds match {
-      case Some((x, _)) => aliveN.join(x, aliveN("url") === x("_xd_id"),
-        "left_anti")
-      case None => aliveN
+    val first = if (cfg.exactDedup) keys.filter(col("first")) else keys
+    // each verdict part with its row count, where known for one narrow
+    // job (exact dups) or for free (the union-find cluster map)
+    val exactVerdicts = Option.when(cfg.exactDedup) {
+      val dups = keys.filter(!col("first"))
+      (dups.select(col("_row"), col("url").as("_v_url"),
+        lit(DropStage.ExactDup).as("_v_stage"),
+        lit(null).cast("string").as("_v_cluster")),
+        Some(dups.queryExecution.toRdd.count()))
     }
-    // near-dup verdicts straight from the O(duplicates) cluster map
-    // (id, cluster): every column the pipeline needs derives from the
-    // map alone, so the r5 detour through MinHash.mark's full-frame
-    // join — which re-executed the stillAliveN window/anti-join subtree
-    // a second time just to project three columns back out — is gone.
-    val nearTbl: Option[(DataFrame, Option[Long])] =
-      if (!cfg.minhashDedup) None
-      else {
-        val (cl, clSize) = MinHash.clusterTable(stillAliveN, "url",
-          "scrubbed_text", minhashConfig(cfg), stageDir = cfg.dedupStageDir)
-        Some((cl.select(col("id").as("_mh_id"),
-          col("cluster").cast("string").as("_mh_cluster"),
-          (col("id") =!= col("cluster")).as("_mh_dup")), clSize))
-      }
-    var out = scored
-    exactDupIds.foreach { case (x, n) =>
-      val side =
-        if (n <= MinHash.BroadcastClustersMaxRows) broadcast(x) else x
-      out = out.join(side, out("url") === x("_xd_id"), "left")
+    val nearVerdicts = Option.when(cfg.minhashDedup) {
+      val (cl, clSize) =
+        if (verify) {
+          val vecs = first.select(col("url").as("id"), col("sig"))
+          MinHash.clustersOf(MinHash.bandsFromVectors(vecs, mh), Some(vecs),
+            mh, cfg.dedupStageDir)
+        } else MinHash.clustersOf(first.select(col("url").as("id"),
+            posexplode(col("bands")).as(Seq("band_id", "band_hash"))),
+          None, mh, cfg.dedupStageDir)
+      (first.join(broadcastIf(cl, clSize), first("url") === cl("id"))
+        .select(col("_row"), col("url").as("_v_url"),
+          when(col("id") =!= col("cluster"), lit(DropStage.MinhashDup))
+            .as("_v_stage"),
+          col("cluster").cast("string").as("_v_cluster")), clSize)
     }
-    nearTbl.foreach { case (nt, sz) =>
-      // broadcast only on a KNOWN-small count; size-unknown maps (the
-      // distributed-CC and stageDir paths) are parquet/RDD-backed and
-      // left to AQE's own statistics
-      val side =
-        if (sz.exists(_ <= MinHash.BroadcastClustersMaxRows)) broadcast(nt)
-        else nt
-      out = out.join(side, out("url") === nt("_mh_id"), "left")
-    }
-    val withStage = out.withColumn("drop_stage", coalesce(
-      Seq(col("drop_stage")) ++
-        exactDupIds.map(_ => when(col("_xd_id").isNotNull,
-          lit(DropStage.ExactDup))) ++
-        nearTbl.map(_ => when(col("_mh_dup"), lit(DropStage.MinhashDup)))
-        : _*))
-    val withCluster = nearTbl match {
-      case Some(_) => withStage
-        .withColumn("minhash_cluster", col("_mh_cluster"))
-        .drop("_mh_id", "_mh_cluster", "_mh_dup")
-      case None => withStage
-        .withColumn("minhash_cluster", lit(null).cast("string"))
-    }
-    (if (cfg.exactDedup) withCluster.drop("_xd_id") else withCluster)
+    val parts = (exactVerdicts ++ nearVerdicts).toSeq
+    val verdicts = parts.map(_._1).reduce(_ union _)
+    // the cluster map counts each url once: exact unless a clustered url
+    // recurs among the first rows
+    val verdictRows = parts.map(_._2).reduce((a, b) =>
+      for (x <- a; y <- b) yield x + y)
+    keyed.join(broadcastIf(verdicts, verdictRows), Seq("_row"), "left")
+      .withColumn("drop_stage",
+        when(col("_v_url").isNull || col("_v_url") === col("url"),
+          coalesce(col("drop_stage"), col("_v_stage")))
+          .otherwise(raise_error(lit("dedup verdict keyed to a row with " +
+            "another url: the scored input changed between its reads"))))
+      .withColumn("minhash_cluster", col("_v_cluster"))
+      .drop("_row", "_v_url", "_v_stage", "_v_cluster")
       .withColumn("keep", col("drop_stage").isNull)
       .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
   }
 
-  /** The MinHash settings both dedup forms run with. */
+  /** An explicit broadcast hint for an O(duplicates) table whose size is
+    * known to be within [[MinHash.BroadcastClustersMaxRows]]; unknown or
+    * larger sizes are left to AQE's own statistics.
+    */
+  private def broadcastIf(df: DataFrame, rows: Option[Long]): DataFrame =
+    if (rows.exists(_ <= MinHash.BroadcastClustersMaxRows)) broadcast(df)
+    else df
+
+  /** The MinHash settings dedup runs with. */
   private def minhashConfig(cfg: PipelineConfig): MinHash.Config =
     MinHash.Config(cfg.minhashBands, cfg.minhashRowsPerBand, cfg.shingleSize,
       driverCcMaxEdges = cfg.ccDriverMaxEdges,
       verifyThreshold = cfg.minhashVerifyThreshold)
 
-  /** Windowed branch form — correct for recurring ids (the keep-first
-    * window ranks rows, not ids, and nothing joins back by id).
-    */
-  private[graft] def dedupByWindow(scored: DataFrame, cfg: PipelineConfig)
-                           (implicit spark: SparkSession): DataFrame = {
-    val alive = scored.filter(col("drop_stage").isNull)
-    val dead = scored.filter(col("drop_stage").isNotNull)
-      .withColumn("minhash_cluster", lit(null).cast("string"))
-
-    val afterExact =
-      if (cfg.exactDedup)
-        ExactDedup.markById(alive, Seq("scrubbed_text"), Seq("warc_ts", "url"),
-            idCol = "url", idIsUnique = Some(false))
-          .withColumn("drop_stage",
-            when(col("is_exact_dup"), lit(DropStage.ExactDup)))
-          .drop("is_exact_dup")
-      else alive
-
-    val afterMinhash =
-      if (cfg.minhashDedup) {
-        val stillAlive = afterExact.filter(col("drop_stage").isNull)
-        val exactDead = afterExact.filter(col("drop_stage").isNotNull)
-          .withColumn("minhash_cluster", lit(null).cast("string"))
-        val marked = MinHash.mark(stillAlive, "url", "scrubbed_text",
-            minhashConfig(cfg), stageDir = cfg.dedupStageDir)
-          .withColumn("drop_stage",
-            when(col("is_near_dup"), lit(DropStage.MinhashDup)))
-          .drop("is_near_dup")
-          .withColumn("minhash_cluster", col("minhash_cluster").cast("string"))
-        marked.unionByName(exactDead)
-      } else afterExact.withColumn("minhash_cluster", lit(null).cast("string"))
-
-    afterMinhash.unionByName(dead)
-      .withColumn("keep", col("drop_stage").isNull)
-      .withColumn("scrubbed_text",
-        when(col("keep"), col("scrubbed_text")))
-  }
-
-  /** Full run. Persists the scored frame because the dedup stages traverse
-    * it more than once (exact window + signatures + cluster joins) — at
+  /** Full run. Materializes the scored frame because dedup reads it twice
+    * (its key table, then the final verdict join) and keys rows by
+    * position, which needs the same partitions on both reads — at
     * cluster scale this persist becomes a checkpointed intermediate table
     * via [[Lineage]].
     *

@@ -200,8 +200,10 @@ object Lineage {
       val outAggs = group.map(b =>
         count(when(col("_bucket") === b, 1)).as(s"b$b"))
       val observedOut = outWithBucket.observe(obsOut, outAggs.head, outAggs.tail: _*)
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      // the writer's own option: dynamic overwrite replaces only this
+      // group's bucket dirs, and the session conf stays as it was
       observedOut.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_bucket").parquet(dataDir)
       val inCounts = obsIn.get
       val outCounts = obsOut.get

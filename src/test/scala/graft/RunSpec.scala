@@ -972,7 +972,7 @@ class RunSpec extends SparkSpec {
       "synth" -> "1500", "output" -> out, "lineage" -> "true"))
     // the dedup intermediates are durably committed under the output
     assert(Files.exists(
-      Paths.get(out, "_dedup_stage", "signatures", "_SUCCESS")))
+      Paths.get(out, "_dedup_stage", "keys-bands-first", "_SUCCESS")))
     assert(Files.exists(
       Paths.get(out, "_dedup_stage", "clusters", "_SUCCESS")))
     // a rerun resumes: score stage recomputes 0 buckets (manifest) and

@@ -503,6 +503,26 @@ class MinHashSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("the capped edge collect is one job and writes no session conf") {
+    // the collect's all-partitions-first setting applies to that query
+    // alone: tasks of the collect job (the edge frame's first
+    // evaluation) check that the session conf does not hold it meanwhile
+    val key = "spark.sql.limit.initialNumPartitions"
+    val before = spark.conf.get(key)
+    val leaked = spark.sparkContext.longAccumulator("conf-leaked")
+    val probe = udf { (x: Long) =>
+      if (SparkSpec.spark.conf.get(key) != before) leaked.add(1L)
+      x
+    }
+    val chain = spark.range(0, 1000, 1, 8)
+      .select((probe(col("id")) + 1).as("src"), col("id").as("dst"))
+    val (res, jobs) = jobsOf(MinHash.clustersWithStats(chain))
+    assert(jobs.size == 1, s"${jobs.size} jobs: the take ladder ran")
+    assert(leaked.value == 0L, "the session conf held the collect's setting")
+    assert(spark.conf.get(key) == before)
+    assert(res.localSize.contains(1001L))
+  }
+
   test("near-duplicates cluster, distinct docs do not") {
     val base = doc(2)
     val rows = Seq(

@@ -21,6 +21,18 @@ class LineageSpec extends SparkSpec {
     assert(run.commits.map(_.rowsOut).sum == 400L)
   }
 
+  test("dynamic bucket overwrite leaves the session conf as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try {
+      val run = Lineage.runStage(Synth.pages(spark, 200L), freshDir(), "url",
+        nBuckets = 8, bucketsPerCommit = 4)(identity)
+      // the second group's write replaced only its own buckets
+      assert(run.output.count() == 200L)
+      assert(spark.conf.get(key) == "STATIC")
+    } finally spark.conf.unset(key)
+  }
+
   test("fresh run with default commit granularity scans the input once") {
     val dir = freshDir()
     val acc = spark.sparkContext.longAccumulator("scanned")

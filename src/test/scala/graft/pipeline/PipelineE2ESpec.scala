@@ -1,8 +1,10 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.model.PipelineConfig
+import graft.dedup.{ExactDedup, MinHash}
+import graft.model.{DropStage, PipelineConfig}
 
 /** The correctness gate (BASELINE.json:2): run the full pipeline on the
   * labeled synthetic corpus and require keep/drop F1 ≥ 0.99 against the
@@ -69,35 +71,124 @@ class PipelineE2ESpec extends SparkSpec {
     assert(repsPerCluster == 0, s"$repsPerCluster planted clusters split")
   }
 
-  test("single-pass dedup (unique ids) == windowed branch dedup, " +
-       "and the id path is what unique-id corpora take") {
-    // r5: dedup() gained a single-sink-pass form for unique ids (one
-    // full-width scan + two O(dups) joins instead of three cache
-    // decodes). Both paths must be row-identical on the same scored
-    // frame — every column, both kept and audited rows.
-    val scored = CorpusPipeline.score(
-      Synth.pages(spark, 1500L)).cache()
-    val cfg = PipelineConfig()
-    val a = CorpusPipeline.dedupById(scored, cfg)(spark)
-    val b = CorpusPipeline.dedupByWindow(scored, cfg)(spark)
+  /** The windowed branch form that dedup used for recurring urls,
+    * kept as the reference `dedup` is compared against: a keep-first
+    * window over the alive rows, then `MinHash.mark` over the
+    * survivors, each branch unioned back.
+    */
+  private def windowOracle(scored: DataFrame, cfg: PipelineConfig): DataFrame = {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val mh = MinHash.Config(cfg.minhashBands, cfg.minhashRowsPerBand,
+      cfg.shingleSize, driverCcMaxEdges = cfg.ccDriverMaxEdges,
+      verifyThreshold = cfg.minhashVerifyThreshold)
+    val alive = scored.filter(col("drop_stage").isNull)
+    val dead = scored.filter(col("drop_stage").isNotNull)
+      .withColumn("minhash_cluster", lit(null).cast("string"))
+    val afterExact =
+      if (cfg.exactDedup)
+        ExactDedup.markById(alive, Seq("scrubbed_text"), Seq("warc_ts", "url"),
+            idCol = "url", idIsUnique = Some(false))
+          .withColumn("drop_stage",
+            when(col("is_exact_dup"), lit(DropStage.ExactDup)))
+          .drop("is_exact_dup")
+      else alive
+    val afterMinhash =
+      if (cfg.minhashDedup) {
+        val stillAlive = afterExact.filter(col("drop_stage").isNull)
+        val exactDead = afterExact.filter(col("drop_stage").isNotNull)
+          .withColumn("minhash_cluster", lit(null).cast("string"))
+        val marked = MinHash.mark(stillAlive, "url", "scrubbed_text", mh)
+          .withColumn("drop_stage",
+            when(col("is_near_dup"), lit(DropStage.MinhashDup)))
+          .drop("is_near_dup")
+          .withColumn("minhash_cluster", col("minhash_cluster").cast("string"))
+        marked.unionByName(exactDead)
+      } else afterExact.withColumn("minhash_cluster", lit(null).cast("string"))
+    afterMinhash.unionByName(dead)
+      .withColumn("keep", col("drop_stage").isNull)
+      .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
+  }
+
+  /** Every column of every row, as multisets. */
+  private def assertMatchesOracle(scored: DataFrame, cfg: PipelineConfig): Unit = {
+    val a = CorpusPipeline.dedup(scored, cfg)
+    val b = windowOracle(scored, cfg)
     assert(a.columns.toSeq == b.columns.toSeq,
       s"column order diverged: ${a.columns.toSeq} vs ${b.columns.toSeq}")
-    assert(a.except(b).isEmpty && b.except(a).isEmpty,
-      "id-path and window-path dedup outputs diverge")
-    // the public entry point routes unique-id corpora through the id
-    // path: same rows again (synth urls are unique)
-    val c = CorpusPipeline.dedup(scored, cfg)
-    assert(c.except(a).isEmpty && a.except(c).isEmpty)
-    // and a corpus with a RECURRING url still dedups correctly via the
-    // window fallback — the duplicated-url rows must each be ranked,
-    // never join-multiplied
-    val dup = Synth.pages(spark, 200L)
-    val recDup = dup.unionByName(
-      dup.filter(col("url") === Synth.urlOf(3L))) // same url twice
-    val scoredDup = CorpusPipeline.score(recDup)
-    val d = CorpusPipeline.dedup(scoredDup, cfg)
-    assert(d.count() == 201L, "window fallback must preserve row count")
-    scored.unpersist()
+    val (onlyA, onlyB) = (a.exceptAll(b).collect(), b.exceptAll(a).collect())
+    assert(onlyA.isEmpty && onlyB.isEmpty,
+      s"dedup diverges from the windowed oracle:\n  only dedup: " +
+        onlyA.take(5).mkString("; ") + "\n  only oracle: " +
+        onlyB.take(5).mkString("; "))
+  }
+
+  test("dedup == the windowed oracle on unique urls") {
+    val scored = CorpusPipeline.score(
+      Synth.pages(spark, 1500L)).transform(graft.SparkUtil.materialize)
+    assertMatchesOracle(scored, PipelineConfig())
+  }
+
+  test("dedup == the windowed oracle on recurring urls: a later exact " +
+       "copy, a near-dup revision, a dropped revision sharing a live url, " +
+       "byte-identical records") {
+    def doc(seed: Int, english: Boolean = true): String =
+      Synth.cleanDoc(Synth.rngFor(31, seed),
+        if (english) Synth.EnVocab else Synth.QqVocab, 8, english = english)
+    def ts(i: Long) = new java.sql.Timestamp(Synth.tsOf(5000L + i).getTime)
+    val (a, b, d) = (doc(1), doc(2), doc(4))
+    def revised(x: String, tail: String) = x.dropRight(12) + tail
+    val extra = Seq(
+      ("https://r.example.com/a", ts(1), a, "en"),
+      ("https://r.example.com/a", ts(9), a, "en"),
+      ("https://r.example.com/b", ts(2), b, "en"),
+      ("https://r.example.com/b2", ts(8), revised(b, " and revised"), "en"),
+      ("https://r.example.com/b", ts(7), revised(b, " and amended"), "en"),
+      ("https://r.example.com/c", ts(3), revised(a, " for c"), "en"),
+      ("https://r.example.com/c", ts(6), doc(5, english = false), "qq"),
+      ("https://r.example.com/d", ts(4), d, "en"),
+      ("https://r.example.com/d", ts(4), d, "en")
+    ).map { case (u, t, x, l) => (u, t, Array[Byte](), x, l) }
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    val pages = Synth.pages(spark, 300L)
+    val scored = CorpusPipeline.score(pages.unionByName(extra)
+      .unionByName(pages.filter(col("url") === Synth.urlOf(3L))))
+      .transform(graft.SparkUtil.materialize)
+    // the fixture exercises what it names: the dropped revision is dead
+    // while its url is live, everything else planted is alive
+    val planted = scored.filter(col("url").startsWith("https://r.example.com/"))
+      .groupBy(col("drop_stage").isNull.as("alive")).count()
+      .as[(Boolean, Long)].collect().toMap
+    assert(planted == Map(true -> 8L, false -> 1L), s"fixture drifted: $planted")
+    for (cfg <- Seq(PipelineConfig(), PipelineConfig(exactDedup = false),
+                    PipelineConfig(minhashVerifyThreshold = 0.8)))
+      assertMatchesOracle(scored, cfg)
+    val out = CorpusPipeline.dedup(scored, PipelineConfig())
+    def verdicts(url: String) = out.filter(col("url") === url)
+      .select(col("keep"), col("drop_stage")).as[(Boolean, String)]
+      .collect().toSeq.sortBy(_._2 == null)
+    assert(verdicts("https://r.example.com/d").map(_._1).count(identity) == 1,
+      "exactly one of two byte-identical records is kept")
+    assert(verdicts("https://r.example.com/a") ==
+      Seq((false, DropStage.ExactDup), (true, null)))
+    // both revisions under url b stay (one id to MinHash); b2 near-dups them
+    assert(verdicts("https://r.example.com/b").map(_._1) == Seq(true, true))
+    assert(verdicts("https://r.example.com/b2").map(_._2) ==
+      Seq(DropStage.MinhashDup))
+    // the live c near-dups a; the dead c keeps its own stage, no cluster
+    assert(verdicts("https://r.example.com/c").map(_._2).toSet ==
+      Set(DropStage.NonEnglish, DropStage.MinhashDup))
+    assert(out.filter(col("url") === "https://r.example.com/c" &&
+      col("drop_stage") === DropStage.NonEnglish &&
+      col("minhash_cluster").isNull).count() == 1L)
+    assert(out.count() == scored.count())
+  }
+
+  test("dedup of a materialized scored frame runs at most 8 jobs") {
+    val scored = CorpusPipeline.score(Synth.pages(spark, 4000L))
+      .transform(graft.SparkUtil.materialize)
+    val (out, jobs) = jobsOf(CorpusPipeline.dedup(scored))
+    assert(jobs.size <= 8, s"${jobs.size} jobs")
+    assert(out.count() == 4000L)
   }
 
   test("deterministic across input partitioning") {
