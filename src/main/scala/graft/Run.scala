@@ -564,9 +564,9 @@ object Run {
       // --robots-respect: honor <meta name=robots> noindex/none under a
       // 0_robots_noindex audit stage (off = reference label parity)
       respectRobots = a.contains("robots-respect"),
-      // --lineage also makes the DEDUP phase resumable: the MinHash
-      // signature table and cluster map commit under the output dir, so
-      // a kill during CC on a long run no longer redoes the corpus-wide
+      // --lineage also makes the DEDUP phase resumable: the dedup key
+      // table and cluster map commit under the output dir, so a kill
+      // during CC on a long run no longer redoes the corpus-wide
       // signature pass (the score stage already resumed via runStage)
       dedupStageDir =
         if (a.contains("lineage")) Some(s"$out/_dedup_stage") else None)
@@ -590,7 +590,18 @@ object Run {
         System.err.println(s"[run] lineage: recomputed " +
           s"${staged.recomputedBuckets.size} buckets, " +
           s"${staged.commits.size} total committed")
-        inPhase(spark, "dedup")(CorpusPipeline.dedup(staged.output, cfg))
+        // a committed dedup stage belongs to the score files it read
+        if (staged.recomputedBuckets.nonEmpty) {
+          val d = new org.apache.hadoop.fs.Path(s"$out/_dedup_stage")
+          d.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(d, true)
+        }
+        // dedup's row key: the row's place in the committed score files
+        // (bucket dir/file, row index), the same on a resume whatever
+        // its file splits
+        val scored = staged.output.withColumn("_row", struct(
+          xxhash64(regexp_extract(col("_metadata.file_path"), "[^/]+/[^/]+$", 0)),
+          col("_metadata.row_index")))
+        inPhase(spark, "dedup")(CorpusPipeline.dedup(scored, cfg))
       } else {
         val conf = spark.conf
         val key = "spark.sql.inMemoryColumnarStorage.compressed"

@@ -566,15 +566,10 @@ object MinHash {
         (srcType == org.apache.spark.sql.types.StringType ||
           srcType == org.apache.spark.sql.types.LongType)) {
       val cap = math.min(driverMaxEdges, (Int.MaxValue - 2).toLong).toInt
-      // ONE job over every partition, each sending at most cap + 1 rows:
-      // a `limit` collect walks Spark's take ladder (1 → 4 → 16 → …
-      // partitions, one sequential job each, since the limit is never
-      // reached in the common case), and widening its first round takes a
-      // session conf that other threads' jobs would see too
-      val rows = e.rdd.mapPartitions(_.take(cap + 1)).collect()
-      if (rows.length <= cap) {
+      val rows = collectUpTo(e.rdd, cap)
+      if (rows.isDefined) {
         e.unpersist(false)
-        return driverUnionFind(e.sparkSession, rows, srcType)
+        return driverUnionFind(e.sparkSession, rows.get, srcType)
       }
     }
     val nEdges = e.count()
@@ -634,6 +629,29 @@ object MinHash {
     System.err.println(s"[minhash] distributed CC converged in $iter " +
       s"round(s) over $nEdges edges")
     CcResult(labels.select(col("id"), col("lbl").as("cluster")), iter)
+  }
+
+  /** Every row of `rdd` when it holds at most `cap`, else None, in ONE
+    * job over every partition, each sending at most cap + 1 rows. A
+    * `limit` collect walks Spark's take ladder (1 → 4 → 16 → … partitions,
+    * one sequential job each, since the limit is never reached in the
+    * common case), and widening its first round takes a session conf
+    * that other threads' jobs would see too. The driver keeps at most
+    * cap rows: partition results that arrive after the running total
+    * passes the cap are dropped.
+    */
+  private[dedup] def collectUpTo[T: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T], cap: Int): Option[Array[T]] = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[T]
+    var over = false
+    // the handler runs on the driver, one partition result at a time
+    rdd.sparkContext.runJob(rdd, (it: Iterator[T]) => it.take(cap + 1).toArray,
+      (_: Int, part: Array[T]) =>
+        if (!over) {
+          over = kept.length + part.length > cap
+          if (over) kept.clear() else kept ++= part
+        })
+    Option.when(!over)(kept.toArray)
   }
 
   /** Path-compressed union-find over a collected edge list (small-graph

@@ -275,40 +275,52 @@ object CorpusPipeline {
     * columns null), mirroring the reference's per-stage exclusion sinks.
     *
     * Plan shape: one route for any input.
-    *  1. Every scored row gets a positional key, `_row`.
+    *  1. Every scored row has a key, `_row`: the input's own `_row`
+    *     column when it has one, else a positional id.
     *  2. One narrow key table over the alive rows, built in one scan of
     *     the text and materialized once (committed under
     *     `cfg.dedupStageDir` instead, when set): `_row`, `url`, the band
     *     hashes (the min-hash vector under verification) and a keep-first
     *     flag from a window over the content hash, ordered by
     *     (warc_ts, url).
-    *  3. Exact verdicts are the non-first rows. Near-dup verdicts come
-    *     from the first rows' bands (every alive row with exact dedup
-    *     off) through [[MinHash.clustersOf]], joined back to those rows
-    *     by url.
-    *  4. One verdict table keyed by `_row`, joined once to the scored
-    *     frame: the only full-width pass.
-    * Verdicts are keyed by position, not by url: a url may recur (raw
-    * multi-snapshot crawls without `--url-dedup`), and of several
+    *  3. Exact verdicts are the non-first rows, keyed by `_row` and
+    *     materialized with their row count. Near-dup verdicts are the
+    *     url -> cluster map of the first rows' bands (every alive row
+    *     with exact dedup off) from [[MinHash.clustersOf]]. Neither reads
+    *     the key table afterwards, so it is released.
+    *  4. One pass over the scored frame joins both, each broadcast when
+    *     its size is known to be small: the only full-width pass. The
+    *     cluster map marks only alive rows that are not exact dups, i.e.
+    *     the first rows it was built from.
+    * Exact verdicts are keyed by position, not by url: a url may recur
+    * (raw multi-snapshot crawls without `--url-dedup`), and of several
     * byte-identical records exactly one must be kept.
     *
-    * `scored` is read twice (key table, final pass) and must give the
-    * same rows in the same partitions both times: pass a materialized
-    * frame, as `run`, `graft.Run` and `graft.Probe` do. A committed key
-    * table holds only for the scored input read back with the same
-    * partitioning; a verdict that lands on a row with another url fails
-    * the final pass instead of marking the wrong document.
+    * `scored` is read twice (key table, final pass). A positional
+    * `_row` needs the same rows in the same partitions both times: pass
+    * a materialized frame, as `run`, `graft.Run` and `graft.Probe` do. A
+    * committed key table (`cfg.dedupStageDir`) outlives one read, so it
+    * needs a `_row` on `scored` that does not depend on how the input is
+    * split: `graft.Run --lineage` passes each row's place in the
+    * committed score files. A verdict that lands on a row with another
+    * url fails the final pass instead of marking the wrong document.
     */
   def dedup(scored: DataFrame, cfg: PipelineConfig = PipelineConfig()): DataFrame = {
     implicit val spark: SparkSession = scored.sparkSession
     if (!cfg.exactDedup && !cfg.minhashDedup)
-      return scored
+      return scored.drop("_row")
         .withColumn("minhash_cluster", lit(null).cast("string"))
         .withColumn("keep", col("drop_stage").isNull)
         .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
     val mh = minhashConfig(cfg)
     val verify = mh.verifyThreshold > 0.0
-    val keyed = scored.withColumn("_row", monotonically_increasing_id())
+    val keyed =
+      if (scored.columns.contains("_row")) scored
+      else {
+        require(cfg.dedupStageDir.isEmpty, "a committed dedup key table " +
+          "needs a `_row` column that does not depend on the input's splits")
+        scored.withColumn("_row", monotonically_increasing_id())
+      }
     val text = col("scrubbed_text")
     val hashes = Seq(
       Option.when(cfg.exactDedup)(ExactDedup.key(Seq(text)).as("_k")),
@@ -323,10 +335,12 @@ object CorpusPipeline {
     val table =
       if (!cfg.exactDedup) hashed.drop("warc_ts")
       else hashed
-        // the window's exchange at a fixed width: AQE would coalesce this
-        // narrow table to a task or two, and every dedup stage after it
-        // (band join, verdicts) would read it at that width
-        .repartition(spark.sparkContext.defaultParallelism, col("_k"))
+        // the window's exchange at a fixed width, never below the
+        // session's shuffle width: AQE would coalesce this narrow table to
+        // a task or two, and every dedup stage after it (band join,
+        // verdicts) would read it at that width
+        .repartition(math.max(spark.sparkContext.defaultParallelism,
+          spark.conf.get("spark.sql.shuffle.partitions").toInt), col("_k"))
         .withColumn("first", row_number().over(Window.partitionBy("_k")
           .orderBy("warc_ts", "url")) === 1)
         .drop("warc_ts", "_k")
@@ -338,16 +352,17 @@ object CorpusPipeline {
       case None => table.transform(graft.SparkUtil.materialize)
     }
     val first = if (cfg.exactDedup) keys.filter(col("first")) else keys
-    // each verdict part with its row count, where known for one narrow
-    // job (exact dups) or for free (the union-find cluster map)
-    val exactVerdicts = Option.when(cfg.exactDedup) {
+    // the exact dups by row: O(duplicates), materialized with its count
+    val exactDups = Option.when(cfg.exactDedup) {
+      val counted = org.apache.spark.sql.Observation()
       val dups = keys.filter(!col("first"))
-      (dups.select(col("_row"), col("url").as("_v_url"),
-        lit(DropStage.ExactDup).as("_v_stage"),
-        lit(null).cast("string").as("_v_cluster")),
-        Some(dups.queryExecution.toRdd.count()))
+        .select(col("_row"), col("url").as("_x_url"))
+        .observe(counted, count(lit(1)).as("rows"))
+        .transform(graft.SparkUtil.materialize)
+      broadcastIf(dups, counted.get("rows").asInstanceOf[Long])
     }
-    val nearVerdicts = Option.when(cfg.minhashDedup) {
+    // the url -> cluster map of the first rows' band graph
+    val clusters = Option.when(cfg.minhashDedup) {
       val (cl, clSize) =
         if (verify) {
           val vecs = first.select(col("url").as("id"), col("sig"))
@@ -356,37 +371,42 @@ object CorpusPipeline {
         } else MinHash.clustersOf(first.select(col("url").as("id"),
             posexplode(col("bands")).as(Seq("band_id", "band_hash"))),
           None, mh, cfg.dedupStageDir)
-      (first.join(broadcastIf(cl, clSize), first("url") === cl("id"))
-        .select(col("_row"), col("url").as("_v_url"),
-          when(col("id") =!= col("cluster"), lit(DropStage.MinhashDup))
-            .as("_v_stage"),
-          col("cluster").cast("string").as("_v_cluster")), clSize)
+      broadcastIf(cl.select(col("id").as("_c_id"),
+          col("cluster").cast("string").as("_c_cluster")),
+        clSize.getOrElse(cl.count()))
     }
-    val parts = (exactVerdicts ++ nearVerdicts).toSeq
-    val verdicts = parts.map(_._1).reduce(_ union _)
-    // the cluster map counts each url once: exact unless a clustered url
-    // recurs among the first rows
-    val verdictRows = parts.map(_._2).reduce((a, b) =>
-      for (x <- a; y <- b) yield x + y)
-    keyed.join(broadcastIf(verdicts, verdictRows), Seq("_row"), "left")
+    // both verdict tables stand on their own: the key table is done with
+    graft.SparkUtil.release(keys)
+    val none = lit(null).cast("string")
+    val byRow = exactDups.fold(keyed.withColumn("_x_url", none))(
+      keyed.join(_, Seq("_row"), "left"))
+    // near-dup marks reach the alive rows that are not exact dups: the
+    // first rows the band graph was built from
+    val marked = clusters.fold(
+      byRow.withColumn("_c_id", none).withColumn("_c_cluster", none))(cl =>
+      byRow.join(cl, col("url") === col("_c_id") &&
+        col("drop_stage").isNull && col("_x_url").isNull, "left"))
+    marked
       .withColumn("drop_stage",
-        when(col("_v_url").isNull || col("_v_url") === col("url"),
-          coalesce(col("drop_stage"), col("_v_stage")))
+        when(col("_x_url").isNull || col("_x_url") === col("url"),
+          coalesce(col("drop_stage"),
+            when(col("_x_url").isNotNull, lit(DropStage.ExactDup)),
+            when(col("_c_id") =!= col("_c_cluster"),
+              lit(DropStage.MinhashDup))))
           .otherwise(raise_error(lit("dedup verdict keyed to a row with " +
             "another url: the scored input changed between its reads"))))
-      .withColumn("minhash_cluster", col("_v_cluster"))
-      .drop("_row", "_v_url", "_v_stage", "_v_cluster")
+      .withColumn("minhash_cluster", col("_c_cluster"))
+      .drop("_row", "_x_url", "_c_id", "_c_cluster")
       .withColumn("keep", col("drop_stage").isNull)
       .withColumn("scrubbed_text", when(col("keep"), col("scrubbed_text")))
   }
 
-  /** An explicit broadcast hint for an O(duplicates) table whose size is
-    * known to be within [[MinHash.BroadcastClustersMaxRows]]; unknown or
-    * larger sizes are left to AQE's own statistics.
+  /** An explicit broadcast hint for an O(duplicates) table of at most
+    * [[MinHash.BroadcastClustersMaxRows]] rows; larger ones are left to
+    * AQE's own statistics.
     */
-  private def broadcastIf(df: DataFrame, rows: Option[Long]): DataFrame =
-    if (rows.exists(_ <= MinHash.BroadcastClustersMaxRows)) broadcast(df)
-    else df
+  private def broadcastIf(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= MinHash.BroadcastClustersMaxRows) broadcast(df) else df
 
   /** The MinHash settings dedup runs with. */
   private def minhashConfig(cfg: PipelineConfig): MinHash.Config =

@@ -982,6 +982,23 @@ class RunSpec extends SparkSpec {
     assert(stages(j2) == stages(j1), s"rerun diverged: $j1 vs $j2")
   }
 
+  test("--lineage resumes the dedup phase under other file splits") {
+    import java.nio.file.Paths
+    val out = dir()
+    val args = Map("synth" -> "1500", "output" -> out, "lineage" -> "true")
+    val j1 = Run.execute(spark, args)
+    val keys = Paths.get(out, "_dedup_stage", "keys-bands-first", "_SUCCESS")
+    val committedAt = Files.getLastModifiedTime(keys)
+    // the resume reads the committed score files in ~1 KB splits, so
+    // its scan partitions differ from the first run's
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "1024")
+    val j2 = try Run.execute(spark, args) finally spark.conf.unset(key)
+    assert(Files.getLastModifiedTime(keys) == committedAt,
+      "the rerun rebuilt the key table instead of resuming from it")
+    assert(stages(j2) == stages(j1), s"rerun diverged: $j1 vs $j2")
+  }
+
   test("signature snapshot round-trip gates an overlapping second run") {
     val out1 = dir(); val out2 = dir(); val sigs = dir() + "/sigs"
     val j1 = Run.execute(spark, Map(

@@ -469,38 +469,16 @@ class MinHashSpec extends SparkSpec {
     // the parallelism repair reads the input's split count off its plan;
     // asking `df.rdd` instead makes AQE run the input's shuffle and
     // broadcast stages only to throw them away
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = "minhash-build-probe"
-    val built = new java.util.concurrent.atomic.AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => built.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
-          case _ => ()
-        }
-    }
     val docs = (0 until 200).map(i => (f"u$i%04d", doc(500L + i, 3)))
       .toDF("url", "text")
     val gone = docs.filter($"url" < "u0050").select($"url".as("_x"))
     val joined = docs.repartition(8)
       .join(gone, $"url" === $"_x", "left_anti").drop("_x")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "build only")
-      try {
-        MinHash.signatures(joined, "url", "text")
-        MinHash.sigVectors(joined, "url", "text")
-      } finally sc.clearJobGroup()
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job the build launched has been counted
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(built.get == 0, s"${built.get} job(s) ran while building")
-    } finally sc.removeSparkListener(listener)
+    val (_, built) = jobsOf {
+      MinHash.signatures(joined, "url", "text")
+      MinHash.sigVectors(joined, "url", "text")
+    }
+    assert(built.isEmpty, s"${built.size} job(s) ran while building")
   }
 
   test("the capped edge collect is one job and writes no session conf") {
@@ -521,6 +499,23 @@ class MinHashSpec extends SparkSpec {
     assert(leaked.value == 0L, "the session conf held the collect's setting")
     assert(spark.conf.get(key) == before)
     assert(res.localSize.contains(1001L))
+  }
+
+  test("the capped collect gives up on many partitions each under the cap") {
+    // 16 partitions of 10 rows against a cap of 50: no partition reaches
+    // the cap, their total does
+    val rdd = spark.sparkContext.parallelize(0 until 160, 16)
+    val (res, jobs) = jobsOf(MinHash.collectUpTo(rdd, 50))
+    assert(res.isEmpty && jobs.size == 1)
+    assert(MinHash.collectUpTo(rdd, 160).map(_.sorted.toSeq)
+      .contains(0 until 160))
+    // the same shape of edge graph leaves the driver path for the
+    // distributed loop, and still finds every component
+    val edges = spark.range(0, 160, 1, 16)
+      .select((col("id") * 2).as("src"), (col("id") * 2 + 1).as("dst"))
+    val cc = MinHash.clustersWithStats(edges, driverMaxEdges = 50)
+    assert(cc.localSize.isEmpty)
+    assert(cc.labels.select("cluster").distinct().count() == 160L)
   }
 
   test("near-duplicates cluster, distinct docs do not") {
@@ -647,39 +642,14 @@ class MinHashSpec extends SparkSpec {
   test("committing a shuffled frame runs its stages once") {
     // asking a shuffled frame for its partition count under AQE runs its
     // shuffle stages, and the write then runs them again
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def jobsIn(group: String)(f: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val markerSeen = new java.util.concurrent.CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-            case Some(`group`) => jobs.incrementAndGet()
-            case Some(g) if g == s"$group-marker" => markerSeen.countDown()
-            case _ => ()
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, group)
-        try f finally sc.clearJobGroup()
-        sc.setJobGroup(s"$group-marker", "marker")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        jobs.get
-      } finally sc.removeSparkListener(listener)
-    }
     val frame = (0 until 200).map(i => (i % 7, s"d$i")).toDF("k", "v")
       .repartition(4).groupBy("k").count()
     val dir = java.nio.file.Files.createTempDirectory("mh_commit").toString
-    val plain = jobsIn("plain-write") {
+    val plain = jobsOf {
       frame.write.parquet(s"$dir/plain"); spark.read.parquet(s"$dir/plain")
-      ()
-    }
-    val viaCommit = jobsIn("committed-write") {
-      MinHash.committed(spark, s"$dir/committed")(frame); ()
-    }
+    }._2.size
+    val viaCommit =
+      jobsOf(MinHash.committed(spark, s"$dir/committed")(frame))._2.size
     assert(viaCommit == plain,
       s"committed ran $viaCommit jobs, a plain write + read-back $plain")
     assert(spark.read.parquet(s"$dir/committed").count() == 7)
