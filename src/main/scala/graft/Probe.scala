@@ -578,8 +578,8 @@ object Probe {
       ExactDedup.keepLatest(mat, Seq("url"), "ts", Seq("id"))
         .drop("n_revisions")
     def byIdPath(): DataFrame =
-      ExactDedup.keepLatestById(mat, Seq("url"), "ts", "id",
-        idIsUnique = Some(true)).drop("n_revisions")
+      ExactDedup.keepLatestById(mat, Seq("url"), "ts", "id")
+        .drop("n_revisions")
     def windowPath(): DataFrame = {
       val w = Window.partitionBy(col("url"))
         .orderBy(col("ts").desc, col("id").desc)

@@ -447,7 +447,7 @@ object Run {
         graft.dedup.ExactDedup.keepLatestById(
           demojibaked.withColumn("_kl_id",
             rowKey128(col("url"), col("warc_ts"), col("text"))),
-          Seq("url"), "warc_ts", "_kl_id", idIsUnique = Some(true))
+          Seq("url"), "warc_ts", "_kl_id")
           .drop("_kl_id", "n_revisions")
       else demojibaked
     // --url-dedup: canonical-URL keep-first (earliest warc_ts wins) on
@@ -603,13 +603,23 @@ object Run {
           col("_metadata.row_index")))
         inPhase(spark, "dedup")(CorpusPipeline.dedup(scored, cfg))
       } else {
+        // a persisted cache, not a SparkUtil.materialize checkpoint: once
+        // built, the cache reports its real size to the planner, while a
+        // checkpoint keeps its input's size estimate. Over --synth input
+        // that estimate is ~8 B/row, and with a checkpoint here the band
+        // join broadcast the whole band table: at 1M docs in a 2 GB
+        // driver the run failed building the broadcast.
+        // The cache is built uncompressed (compression cost 3-10x the
+        // scoring compute at 2M docs). The flag is read when the cache is
+        // registered, which runs no job, and is restored at once: unset
+        // again when it was unset, so no later job carries it.
         val conf = spark.conf
         val key = "spark.sql.inMemoryColumnarStorage.compressed"
-        val prev = conf.get(key, "true")
+        val prev = conf.getAll.get(key) // None when unset: getOption gives the default
         conf.set(key, "false")
         val scored =
           try pin(CorpusPipeline.score(pages, cfg, metrics = Some(metrics)))
-          finally conf.set(key, prev)
+          finally prev.fold(conf.unset(key))(conf.set(key, _))
         // under --task-metrics, force the scored cache inside its own
         // phase (one no-op count against the registered cache) so the
         // scoring compute is attributed to `score` instead of riding

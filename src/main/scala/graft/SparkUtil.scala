@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Cross-cutting Spark helpers. */
 object SparkUtil {
@@ -19,20 +18,25 @@ object SparkUtil {
     * `persist`, which leaks a CacheManager entry per call in a
     * long-lived session unless the caller remembers to unpersist.
     *
-    * The reliable path persists the frame around `checkpoint()`:
+    * Neither variant builds a columnar cache: both store rows, so the
+    * session's columnar-cache settings (compression among them) do not
+    * apply, and no conf is written around them. Unlike a built cache,
+    * the result keeps its plan's size ESTIMATE, not its data's size: over
+    * an input whose estimate is far too small (`Synth.pages`, ~8 B/row)
+    * a join may broadcast a checkpoint of corpus size.
+    *
+    * The reliable path checkpoints a local checkpoint of the frame:
     * Spark's eager checkpoint runs TWO jobs over the RDD — the
     * materializing count, then ReliableRDDCheckpointData's separate
-    * write job — so an unpersisted frame is computed twice on exactly
-    * the cluster deployments this helper targets (the CC loop calls
-    * this 3× per round). The scoped persist makes the write job a
-    * cache read; it is released before returning, so no CacheManager
-    * entry outlives the call.
+    * write job — so an unmaterialized frame is computed twice on exactly
+    * the cluster deployments this helper targets. Both jobs read the
+    * local blocks instead, which are released before returning.
     */
   def materialize(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      try df.checkpoint()
-      finally df.unpersist(blocking = false)
+      val local = df.localCheckpoint()
+      try local.checkpoint()
+      finally release(local)
     } else df.localCheckpoint()
 
   /** Explicitly drop a [[materialize]]d frame's stored blocks NOW instead

@@ -39,69 +39,6 @@ object ExactDedup {
     df.withColumn("is_exact_dup", row_number().over(w) > 1)
   }
 
-  /** One narrow aggregation proving `idCol` is a NON-NULL UNIQUE key of
-    * `df`: total count == non-null count == distinct count. The single
-    * definition of the uniqueness gate behind [[markById]] and
-    * [[keepLatestById]] — shared so the sites can never drift. Eager
-    * (runs a job); persist `df` first.
-    */
-  def idIsUniqueKey(df: DataFrame, idCol: String): Boolean = {
-    // r6: single groupBy instead of count+countDistinct — the distinct
-    // aggregate planned an Expand (2× rows through the exchange) plus an
-    // extra aggregate phase. "non-null unique key" ⟺ no null ids AND
-    // every id group is a singleton, which one keyed aggregation answers
-    // with map-side combining and half the shuffle bytes.
-    val u = df.select(col(idCol).as("__id"))
-      .groupBy("__id").agg(count(lit(1)).as("c"))
-      .agg(coalesce(max(col("c")), lit(1L)).as("mx"), // empty: trivially unique
-        coalesce(sum(when(col("__id").isNull, col("c")).otherwise(lit(0L))),
-          lit(0L)).as("nulls"))
-      .head()
-    u.getLong(0) == 1L && u.getLong(1) == 0L
-  }
-
-  /** [[mark]] for rows with a unique id column, shuffling only a narrow
-    * projection: the keep-first window runs over (id, content-hash,
-    * order-cols) — ~100 B/row instead of the full page (~1.3 KB with
-    * scrubbed text) — and the resulting duplicate-id set joins back onto
-    * the full rows, where AQE converts to a broadcast join whenever the
-    * dup set is small (the common case). At 2M docs this replaces a
-    * 2.6 GB wide shuffle+sort with a 150 MB one.
-    *
-    * The join-back is only correct when `idCol` is UNIQUE (and non-null):
-    * if a duplicate-group row shares its id with the group's keep-first
-    * row, the join would mark BOTH — keep-first silently becoming
-    * drop-all. Common-Crawl-style inputs violate this (the same url recurs
-    * across snapshots), so uniqueness is verified up front with one cheap
-    * narrow aggregation over the id column; on violation this falls back
-    * to the windowed [[mark]], which is always correct. The check is one
-    * extra O(rows) pass of an id-only projection (count + countDistinct —
-    * a narrow shuffle of the ids) and an EAGER action: callers should
-    * persist `df` first, as [[graft.pipeline.CorpusPipeline.run]] does.
-    * Callers that can GUARANTEE uniqueness (surrogate keys, an
-    * upstream-deduped id column) pass `idIsUnique = Some(true)` to skip
-    * the check entirely; `Some(false)` routes straight to the windowed
-    * mark.
-    */
-  def markById(df: DataFrame, dupCols: Seq[String], orderCols: Seq[String],
-               idCol: String,
-               idIsUnique: Option[Boolean] = None): DataFrame = {
-    val unique = idIsUnique.getOrElse(idIsUniqueKey(df, idCol))
-    if (!unique) return mark(df, dupCols, orderCols)
-    val w = Window
-      .partitionBy(col("__k"))
-      .orderBy(orderCols.map(col): _*)
-    val dupIds = df
-      .select((col(idCol).as("__dup_id")) +:
-        (key(dupCols.map(col)).as("__k")) +: orderCols.map(col): _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") > 1)
-      .select("__dup_id")
-    df.join(dupIds, df(idCol) === col("__dup_id"), "left")
-      .withColumn("is_exact_dup", col("__dup_id").isNotNull)
-      .drop("__dup_id")
-  }
-
   /** Keep-first dedup: survivors only. */
   def dedup(df: DataFrame, dupCols: Seq[String], orderCols: Seq[String]): DataFrame =
     mark(df, dupCols, orderCols).filter(!col("is_exact_dup")).drop("is_exact_dup")
@@ -123,8 +60,7 @@ object ExactDedup {
 
   /** Crawl-revisit resolution: keep the LATEST revision of each page.
     *
-    * Common-Crawl-style inputs carry the same url across snapshots
-    * (the very case [[markById]]'s uniqueness check guards against);
+    * Common-Crawl-style inputs carry the same url across snapshots;
     * before training-data selection a corpus normally collapses each url
     * to its newest fetch. The keep-first window form would sort every
     * group; this form is ONE hash aggregation — `max_by` of the full row
@@ -193,18 +129,14 @@ object ExactDedup {
     * agg is the only extra pass. Appending `idCol` to the order struct
     * makes the order total without hashing anything.
     *
-    * Same contract as [[markById]]: `idCol` must be unique and non-null —
-    * verified with one cheap narrow aggregation unless the caller passes
-    * `idIsUnique = Some(true)`; on violation this falls back to
-    * [[keepLatest]], which is always correct.
+    * Precondition: `idCol` is a unique, non-null key of `df` — a
+    * synthesized row key or a surrogate id. It is not checked: a shared
+    * id would join one winner back onto every row that carries it.
     */
   def keepLatestById(df: DataFrame, keyCols: Seq[String], tsCol: String,
                      idCol: String,
-                     tieCols: Seq[String] = Nil,
-                     idIsUnique: Option[Boolean] = None): DataFrame = {
+                     tieCols: Seq[String] = Nil): DataFrame = {
     require(keyCols.nonEmpty, "keepLatestById: keyCols must be non-empty")
-    val unique = idIsUnique.getOrElse(idIsUniqueKey(df, idCol))
-    if (!unique) return keepLatest(df, keyCols, tsCol, tieCols)
     val ord = struct(((tsCol +: tieCols) :+ idCol).map(col): _*)
     val winners = df
       .select(keyCols.map(col) :+ ord.as("__ord") :+

@@ -99,22 +99,10 @@ object MinHash {
       seed = seed)
   }
 
-  /** Word-shingle column: k-word windows joined by a single space; docs
-    * shorter than k words contribute their whole text as one shingle.
-    * Empty tokens (leading/trailing whitespace artifacts of `split`) are
-    * dropped so this matches [[bandHashesOf]]'s word stream exactly.
-    */
-  def shingles(textCol: Column, k: Int): Column = {
-    val ws = filter(split(textCol, "\\s+"), w => length(w) > 0)
-    when(size(ws) >= k,
-      transform(sequence(lit(0), size(ws) - k),
-        i => array_join(slice(ws, i + 1, lit(k)), " ")))
-      .otherwise(array(textCol))
-  }
-
   /** Per-document band hashes in one pass — no shingle materialization, no
-    * shuffle. Produces BIT-IDENTICAL results to [[signaturesSql]] (asserted
-    * in DedupSpec) by reusing Spark's own XXH64 with the same fold order as
+    * shuffle. Produces BIT-IDENTICAL results to the declarative Catalyst
+    * formulation (`MinHashSql.signatures`, the oracle DedupSpec checks it
+    * against) by reusing Spark's own XXH64 with the same fold order as
     * the `xxhash64` SQL function: h = seed42; h = hashLong(arg, h) per arg;
     * strings hash their UTF-8 bytes.
     *
@@ -255,38 +243,6 @@ object MinHash {
       case _ => Some(df.rdd.getNumPartitions)
     }
     if (splits.exists(_ * 2 < par)) df.repartition(par) else df
-  }
-
-  /** The fully declarative Catalyst formulation (north-star shape:
-    * posexplode shingles → seeded xxhash64 → 112-way min agg → band
-    * hashes). Kept as the cross-validation oracle for [[signatures]] and
-    * as the zero-UDF fallback; the explode+shuffle makes it ~30× more
-    * expensive at scale.
-    */
-  def signaturesSql(df: DataFrame, idCol: String, textCol: String,
-                    cfg: Config = Config()): DataFrame = {
-    // permutation i = xxhash64(shingle_hash, i): a fresh 64-bit mix per
-    // permutation with no arithmetic that can overflow under ANSI mode
-    val mins: Seq[Column] = (0 until cfg.numHashes).map { i =>
-      min(xxhash64(col("sh_hash"), lit(i))).as(s"m$i")
-    }
-    val bandCols: Column = array((0 until cfg.bands).map { b =>
-      val slice = (0 until cfg.rowsPerBand).map(r => col(s"m${b * cfg.rowsPerBand + r}"))
-      xxhash64(slice :+ lit(b): _*)
-    }: _*)
-
-    // null text emits NO rows, matching the UDF path exactly (its band
-    // UDF returns null and posexplode drops the doc): unfiltered, the
-    // shingles() fallback branch would give every null-text doc ONE null
-    // shingle and therefore an IDENTICAL signature — the SQL path would
-    // mark all null-text docs near-dups of each other while the primary
-    // path marks none, breaking the documented bit-identity
-    df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        explode(shingles(col(textCol), cfg.shingleSize)).as("shingle"))
-      .select(col("id"), xxhash64(col("shingle")).as("sh_hash"))
-      .groupBy("id").agg(mins.head, mins.tail: _*)
-      .select(col("id"), posexplode(bandCols).as(Seq("band_id", "band_hash")))
   }
 
   /** Candidate duplicate edges (src → smaller dst) from shared bands.
@@ -436,7 +392,7 @@ object MinHash {
         // two consumers (band fold + verification join) — an eager
         // checkpoint guarantees one execution (the lazy persist raced
         // under AQE's concurrent exchange materialization; see
-        // clusterTable) and needs no unpersist bookkeeping.
+        // mark) and needs no unpersist bookkeeping.
         val newVecs = sigVectors(newDf, idCol, textCol, cfg)
           .transform(graft.SparkUtil.materialize)
         // per-bucket reps: stored with the snapshot when available
@@ -729,39 +685,12 @@ object MinHash {
 
   /** End-to-end: mark near-duplicate non-representatives in `df`.
     * Adds `is_near_dup` and `minhash_cluster` (null for unclustered docs).
-    *
-    * `stageDir`: optional dedup-phase resume directory. When set, the
-    * signature table and the cluster map — the two expensive
-    * intermediates of the near-dup flow — are committed as parquet
-    * under it ([[committed]]); a re-run over the SAME input picks them
-    * up instead of re-hashing the corpus (the signature pass is one
-    * full corpus scan — exactly what a killed 100-TB run must not
-    * redo). Input identity is the CALLER's contract, same as every
-    * lineage manifest: stale dirs return stale marks.
-    */
-  def mark(df: DataFrame, idCol: String, textCol: String,
-           cfg: Config = Config(), stageDir: Option[String] = None)
-          (implicit spark: SparkSession): DataFrame = {
-    val (cl, clSize) = clusterTable(df, idCol, textCol, cfg, stageDir)
-    val clSel = cl.select(col("id").as(idCol), col("cluster").as("minhash_cluster"))
-    val clJoin =
-      if (clSize.getOrElse(cl.count()) <= BroadcastClustersMaxRows)
-        broadcast(clSel)
-      else clSel
-    df.join(clJoin, Seq(idCol), "left")
-      .withColumn("is_near_dup",
-        col("minhash_cluster").isNotNull && col(idCol) =!= col("minhash_cluster"))
-  }
-
-  /** The (id, cluster) map behind [[mark]] — every clustered doc with its
-    * component-min representative — plus its row count when known
-    * driver-side for free (union-find fast path), computed from text.
     * Callers that already hold band hashes (CorpusPipeline's key table)
     * call [[clustersOf]] directly.
     */
-  def clusterTable(df: DataFrame, idCol: String, textCol: String,
-                   cfg: Config = Config(), stageDir: Option[String] = None)
-                  (implicit spark: SparkSession): (DataFrame, Option[Long]) = {
+  def mark(df: DataFrame, idCol: String, textCol: String,
+           cfg: Config = Config())
+          (implicit spark: SparkSession): DataFrame = {
     // materialize the narrow signature table (id + 2 longs per band,
     // ~30 MB per 1M docs): candidateEdges consumes it twice and the
     // min-hash UDF pass over the corpus text is the expensive part.
@@ -774,50 +703,42 @@ object MinHash {
     // InMemoryRelation reuse here. The checkpoint guarantees exactly
     // one execution by construction, stores the same executor-local
     // blocks, and needs no unpersist bookkeeping (ContextCleaner-
-    // managed). With a stageDir the table is parquet-backed instead
-    // (committed = durable resume point AND materialization in one).
-    // Same for the verification-mode vector table and the band table
-    // derived from it.
-    val vecs: Option[DataFrame] =
-      if (cfg.verifyThreshold <= 0.0) None
-      else Some(stageDir match {
-        case Some(d) => committed(spark, s"$d/sig_vectors")(
-          sigVectors(df, idCol, textCol, cfg))
-        case None => sigVectors(df, idCol, textCol, cfg)
-          .transform(graft.SparkUtil.materialize)
-      })
-    val sigs = vecs match {
-      case Some(v) =>
-        // materialized too: candidateEdges consumes the band table
-        // twice, and the band fold + posexplode would otherwise re-run
-        // over the vector table per consumer. Narrow (id + 2 longs ×
-        // bands), same footprint the reference-mode path already pays.
-        bandsFromVectors(v, cfg).transform(graft.SparkUtil.materialize)
-      case None => stageDir match {
-        case Some(d) => committed(spark, s"$d/signatures")(
-          signatures(df, idCol, textCol, cfg))
-        case None => signatures(df, idCol, textCol, cfg)
-          .transform(graft.SparkUtil.materialize)
-      }
-    }
+    // managed). Same for the verification-mode vector table and the
+    // band table folded from it, which candidateEdges also reads twice.
+    val vecs = Option.when(cfg.verifyThreshold > 0.0)(
+      sigVectors(df, idCol, textCol, cfg).transform(graft.SparkUtil.materialize))
+    val sigs = vecs.fold(signatures(df, idCol, textCol, cfg))(
+      bandsFromVectors(_, cfg)).transform(graft.SparkUtil.materialize)
     // finally: the corpus-sized signature checkpoints are released
     // EXPLICITLY once the cluster map exists (or the computation failed)
     // — waiting for the ContextCleaner's weak-ref GC left multi-GB
     // blocks occupying unified storage memory through the remaining
     // pipeline phases on the 10M capstone.
-    try clustersOf(sigs, vecs, cfg, stageDir)
-    finally {
-      graft.SparkUtil.release(sigs)
-      vecs.foreach(graft.SparkUtil.release)
-    }
+    val (cl, clSize) =
+      try clustersOf(sigs, vecs, cfg, None)
+      finally {
+        graft.SparkUtil.release(sigs)
+        vecs.foreach(graft.SparkUtil.release)
+      }
+    val clSel = cl.select(col("id").as(idCol), col("cluster").as("minhash_cluster"))
+    val clJoin =
+      if (clSize.getOrElse(cl.count()) <= BroadcastClustersMaxRows)
+        broadcast(clSel)
+      else clSel
+    df.join(clJoin, Seq(idCol), "left")
+      .withColumn("is_near_dup",
+        col("minhash_cluster").isNotNull && col(idCol) =!= col("minhash_cluster"))
   }
 
-  /** The band-join / connected-components half of [[clusterTable]]:
-    * the (id, cluster) map and its known size from a precomputed
-    * (id, band_id, band_hash) table and, under verification, the
-    * (id, sig) vector table it was folded from. Both are read more than
-    * once, so pass tables whose expensive part is already materialized.
-    * With a `stageDir` the cluster map is committed under it.
+  /** The band-join / connected-components half of [[mark]]: the
+    * (id, cluster) map — every clustered doc with its component-min
+    * representative — and its row count when known driver-side for free
+    * (union-find fast path), from a precomputed (id, band_id, band_hash)
+    * table and, under verification, the (id, sig) vector table it was
+    * folded from. Both are read more than once, so pass tables whose
+    * expensive part is already materialized. With a `stageDir` the
+    * cluster map is committed under it ([[committed]]): a rerun reuses a
+    * committed map, and a killed write (no `_SUCCESS`) recomputes.
     */
   def clustersOf(sigs: DataFrame, vecs: Option[DataFrame], cfg: Config,
                  stageDir: Option[String])

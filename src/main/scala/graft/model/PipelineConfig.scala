@@ -76,12 +76,12 @@ case class PipelineConfig(
     // Exact-dedup before MinHash (utils/dedup_large_csv.py semantics).
     exactDedup: Boolean = true,
     minhashDedup: Boolean = true,
-    // Dedup-stage resume dir: when set, the MinHash signature table and
-    // cluster map are committed as parquet under this directory and a
-    // re-run over the SAME scored input reuses them instead of
-    // recomputing (MinHash.mark stageDir). Run wires this under the
-    // --lineage output so a kill during the dedup phase of a long run no
-    // longer redoes the signature pass. The caller owns input identity:
+    // Dedup-stage resume dir: when set, the dedup key table
+    // (CorpusPipeline.dedup) and the cluster map (MinHash.clustersOf)
+    // are committed as parquet under this directory and a re-run over
+    // the SAME scored input reuses them instead of recomputing. Run
+    // wires this under the --lineage output so a kill during the dedup
+    // phase of a long run no longer redoes the signature pass. The caller owns input identity:
     // reusing the dir against different input returns stale marks (same
     // contract as the score-stage lineage manifest).
     dedupStageDir: Option[String] = None

@@ -414,36 +414,18 @@ object CorpusPipeline {
       driverCcMaxEdges = cfg.ccDriverMaxEdges,
       verifyThreshold = cfg.minhashVerifyThreshold)
 
-  /** Full run. Materializes the scored frame because dedup reads it twice
-    * (its key table, then the final verdict join) and keys rows by
-    * position, which needs the same partitions on both reads — at
-    * cluster scale this persist becomes a checkpointed intermediate table
-    * via [[Lineage]].
-    *
-    * The cache is built UNCOMPRESSED: measured at 2M docs, building the
-    * default compressed columnar cache cost 79–245 s against 22 s
-    * uncompressed (the dictionary/RLE encoders choke on long high-entropy
-    * text columns), i.e. compression cost 3–10× the entire scoring
-    * compute. The flag is captured at cache registration, so it is scoped
-    * to this persist and restored immediately.
+  /** Full run. Materializes the scored frame ([[graft.SparkUtil.materialize]])
+    * because dedup reads it twice (its key table, then the final verdict
+    * join) and keys rows by position, which needs the same partitions on
+    * both reads — at cluster scale this becomes a checkpointed
+    * intermediate table via [[Lineage]]. The checkpoint stores rows, not a
+    * columnar cache, so no session conf is written around it; the
+    * returned frame references it, and it is released when that frame is
+    * dropped.
     */
   def run(pages: DataFrame, cfg: PipelineConfig = PipelineConfig(),
-          models: Models = defaultModels): DataFrame = {
-    val conf = pages.sparkSession.conf
-    val key = "spark.sql.inMemoryColumnarStorage.compressed"
-    val prev = conf.get(key, "true")
-    conf.set(key, "false")
-    // materialize, NOT persist: the returned frame references the scored
-    // intermediate, so a persist here leaked one CacheManager entry per
-    // run() call on a long-lived session (CI, notebooks). localCheckpoint
-    // stores serialized UnsafeRows (no columnar compression at all); the
-    // reliable-checkpoint path persists internally, where the scoped
-    // compression flag still applies.
-    val scored =
-      try score(pages, cfg, models).transform(graft.SparkUtil.materialize)
-      finally conf.set(key, prev)
-    dedup(scored, cfg)
-  }
+          models: Models = defaultModels): DataFrame =
+    dedup(score(pages, cfg, models).transform(graft.SparkUtil.materialize), cfg)
 
   /** Exclusion-sink split (reference: per-stage removed-doc audit dirs,
     * findweb.py:95-113): returns (kept, dropped) without recomputation

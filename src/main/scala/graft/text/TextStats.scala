@@ -174,26 +174,12 @@ object TextStats {
       if (totChars == 0) 0.0 else dupChars.toDouble / totChars)
   }
 
-  /** 64-bit polynomial hash per word — computed once per doc and combined
-    * into rolling n-gram keys, replacing per-window StringBuilder keys
-    * (9 n-gram passes × string alloc + full rehash was the analyze hot
-    * spot). A 64-bit collision across a document's ≤100k windows is
+  /** Rolling n-gram key over the per-word 64-bit polynomial hashes that
+    * [[compute]] builds once per doc — replacing per-window StringBuilder
+    * keys (9 n-gram passes × string alloc + full rehash was the analyze
+    * hot spot). A 64-bit collision across a document's ≤100k windows is
     * ~1e-9-rare; thresholds are fractions, so the effect would be noise.
     */
-  private[text] def wordHashes(ws: Array[String]): Array[Long] = {
-    val hs = new Array[Long](ws.length)
-    var i = 0
-    while (i < ws.length) {
-      val w = ws(i)
-      var h = 1125899906842597L
-      var j = 0
-      while (j < w.length) { h = h * 31 + w.charAt(j); j += 1 }
-      hs(i) = h
-      i += 1
-    }
-    hs
-  }
-
   @inline private def ngramKey(hs: Array[Long], i: Int, n: Int): Long = {
     var h = -7046029254386353131L
     var j = 0

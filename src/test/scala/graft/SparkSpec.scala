@@ -27,31 +27,35 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
-  /** Runs `f` under a fresh job group and returns its result with the
-    * properties of every job it launched, in start order. Listener
-    * events arrive in order, so once a marker job's start is seen every
-    * job `f` launched has been counted.
+  /** Runs `f` under a fresh tag and returns its result with the
+    * properties of every job it launched, in start order. The tag is a
+    * local property of its own, not the job group, so jobs that `f` runs
+    * under a job group of their own (`graft.Run`'s phases) are counted
+    * too. Listener events arrive in order, so once a marker job's start
+    * is seen every job `f` launched has been counted.
     */
   def jobsOf[T](f: => T): (T, Seq[java.util.Properties]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val key = "graft.test.jobsOf"
+    val tag = s"jobs-of-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).foreach { p =>
-          val g = p.getProperty("spark.jobGroup.id")
-          if (g == group) jobs.add(p)
-          else if (g == s"$group-marker") markerSeen.countDown()
+          val t = p.getProperty(key)
+          if (t == tag) jobs.add(p)
+          else if (t == s"$tag-marker") markerSeen.countDown()
         }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "counted")
-      val r = try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      sc.setLocalProperty(key, tag)
+      val r = try f finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"$tag-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
       import scala.jdk.CollectionConverters._
       (r, jobs.asScala.toSeq)

@@ -38,13 +38,13 @@ class SparkUtilSpec extends SparkSpec {
       val out = SparkUtil.materialize(df)
       assert(out.count() === 1000L)
       // Spark's eager reliable checkpoint runs a materializing count job
-      // AND a separate checkpoint-write job: without the scoped persist
-      // inside materialize() the write job recomputes the frame and this
+      // AND a separate checkpoint-write job: unless both read a local
+      // checkpoint of the frame, the write job recomputes it and this
       // reads 2000 — exactly double-charging the CC loop's 3 calls/round
       // on cluster deployments
       assert(acc.value === 1000L,
         s"frame evaluated ${acc.value} times; expected once")
-      // the scoped persist must not outlive the call. Asserted on THIS
+      // no CacheManager entry is made for the input. Asserted on THIS
       // frame (lookupCachedData), not cacheManager.isEmpty: suites share
       // the session and run concurrently, so another suite's cached
       // frame can legitimately be live here (LineageSpec pins one).
@@ -53,6 +53,29 @@ class SparkUtilSpec extends SparkSpec {
           df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
         "materialize leaked a CacheManager entry for its input frame")
     } finally setCheckpointDirRaw(None)
+  }
+
+  test("no pipeline job runs with the columnar-cache compression conf written") {
+    // SQL confs a session has written ride every job's local properties,
+    // and the session is shared: a pipeline path that sets this conf, or
+    // restores it by writing the default back, leaves it written for
+    // every later job of every suite. No suite writes it, so a job
+    // carrying it means a pipeline path did. (graft.Run sets it only
+    // while it registers its scored cache, which runs no job.)
+    val key = "spark.sql.inMemoryColumnarStorage.compressed"
+    def written(jobs: Seq[java.util.Properties]) =
+      jobs.flatMap(p => Option(p.getProperty(key))).distinct
+    val (n, runJobs) = jobsOf(
+      CorpusPipeline.run(Synth.pages(spark, 300L)).count())
+    assert(n === 300L && runJobs.nonEmpty)
+    assert(written(runJobs).isEmpty,
+      s"CorpusPipeline.run ran jobs with $key = ${written(runJobs)}")
+    val out = Files.createTempDirectory("no_conf").toString
+    val (json, execJobs) = jobsOf(Run.execute(spark, Map(
+      "synth" -> "300", "output" -> out, "task-metrics" -> "true")))
+    assert(json.contains("\"docs_in\":300") && execJobs.nonEmpty, json)
+    assert(written(execJobs).isEmpty,
+      s"Run.execute ran jobs with $key = ${written(execJobs)}")
   }
 
   test("repeated mark/run calls leave no CacheManager entries behind") {

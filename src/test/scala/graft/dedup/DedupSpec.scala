@@ -22,41 +22,6 @@ class ExactDedupSpec extends SparkSpec {
     assert(marked.filter($"is_exact_dup").select("url").as[String].collect().toSeq == Seq("b"))
   }
 
-  test("markById matches the windowed mark exactly") {
-    val rows = (0 until 200).map { i =>
-      (s"u$i", (200 - i).toLong, s"text ${i % 37}")
-    }
-    val df = rows.toDF("url", "ts", "text")
-    def flagged(m: org.apache.spark.sql.DataFrame) =
-      m.filter($"is_exact_dup").select("url").as[String].collect().toSet
-    val wide = flagged(ExactDedup.mark(df, Seq("text"), Seq("ts", "url")))
-    val narrow = flagged(ExactDedup.markById(df, Seq("text"), Seq("ts", "url"), "url"))
-    assert(wide == narrow)
-    assert(narrow.nonEmpty)
-  }
-
-  test("markById with non-unique ids falls back to windowed keep-first") {
-    // Common-Crawl shape: the same url recurs across snapshots. A naive
-    // id-keyed join-back would mark EVERY row of a recrawled url —
-    // including the keep-first row (drop-all data loss). The fallback must
-    // keep exactly one row per duplicate text group.
-    val df = Seq(
-      // url u1 recrawled: same text twice → keep the ts=1 row
-      ("u1", 1L, "same text"), ("u1", 2L, "same text"),
-      // url u2 recrawled with DIFFERENT texts → both kept
-      ("u2", 3L, "alpha text"), ("u2", 4L, "beta text"),
-      // cross-url duplicate of alpha → dropped (u2@3 is first)
-      ("u3", 5L, "alpha text")
-    ).toDF("url", "ts", "text")
-    val marked = ExactDedup.markById(df, Seq("text"), Seq("ts", "url"), "url")
-    val kept = marked.filter(!$"is_exact_dup")
-      .select("url", "ts").as[(String, Long)].collect().toSet
-    assert(kept == Set(("u1", 1L), ("u2", 3L), ("u2", 4L)),
-      s"wrong survivors: $kept")
-    // exactly one survivor per duplicate text group — no drop-all
-    assert(marked.filter(!$"is_exact_dup").count() == 3L)
-  }
-
   test("bloom decontaminate is exact despite probabilistic prefilter") {
     val docs = (0 until 500).map(i => (i.toLong, s"document number $i body"))
       .toDF("id", "text")
@@ -175,7 +140,7 @@ class ExactDedupSpec extends SparkSpec {
       Seq("url", "ts", "text", "extra", "n_revisions"))
   }
 
-  test("keepLatestById matches keepLatest; non-unique id falls back windowed") {
+  test("keepLatestById matches keepLatest") {
     val df = (0 until 500).map { i =>
       (s"u${i % 40}", (i * 131 % 97).toLong, s"rev $i", i)
     }.toDF("url", "ts", "text", "extra")
@@ -187,11 +152,6 @@ class ExactDedupSpec extends SparkSpec {
       .select("url", "ts", "text", "extra", "n_revisions")
       .collect().map(_.toString).sorted.toSeq
     assert(narrow == wide)
-    // id column with duplicates → falls back to the wide form, still right
-    val dupId = df.withColumn("badid", col("extra") % 7)
-    val fb = ExactDedup.keepLatestById(dupId, Seq("url"), "ts", "badid",
-      tieCols = Seq("extra"))
-    assert(fb.columns.contains("n_revisions") && fb.count() == 40)
   }
 
   test("keepLatest: null timestamp never shadows a dated revision; map payload ok") {
@@ -451,7 +411,7 @@ class MinHashSpec extends SparkSpec {
       sigs.select("id", "band_id", "band_hash")
         .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     val fast = collect(MinHash.signatures(df, "id", "text"))
-    val sql = collect(MinHash.signaturesSql(df, "id", "text"))
+    val sql = collect(MinHashSql.signatures(df, "id", "text"))
     assert(fast == sql)
     assert(!fast.exists(_._1.startsWith("nulldoc")),
       "null-text docs must emit no signature rows")
@@ -574,12 +534,6 @@ class MinHashSpec extends SparkSpec {
     // a threshold below every true similarity reproduces mark exactly
     assert(state(MinHash.mark(df, "id", "text",
       MinHash.Config(verifyThreshold = 0.05))) == state(loose))
-    // verified mode commits the VECTOR table under the stage dir
-    val dir = java.nio.file.Files.createTempDirectory("mh_verify").toString
-    val viaStage = MinHash.mark(df, "id", "text",
-      MinHash.Config(verifyThreshold = 1.0), stageDir = Some(dir))
-    assert(state(viaStage) == state(strict))
-    assert(spark.read.parquet(s"$dir/sig_vectors").count() == 4)
     // out-of-range thresholds die loudly
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
     val vecsDf = MinHash.sigVectors(df, "id", "text")
@@ -591,52 +545,49 @@ class MinHashSpec extends SparkSpec {
     }
   }
 
-  test("stageDir commits signatures + clusters; a resumed run reuses them") {
+  test("clustersOf commits the cluster map; a rerun reuses it") {
     implicit val s = spark
     val dir = java.nio.file.Files.createTempDirectory("mh_stage").toString
+    def clusters(df: org.apache.spark.sql.DataFrame, cfg: MinHash.Config,
+                 stageDir: Option[String]) = {
+      val vecs = Option.when(cfg.verifyThreshold > 0.0)(
+        MinHash.sigVectors(df, "id", "text", cfg))
+      val sigs = vecs.fold(MinHash.signatures(df, "id", "text", cfg))(
+        MinHash.bandsFromVectors(_, cfg))
+      MinHash.clustersOf(sigs, vecs, cfg, stageDir)._1
+        .select(col("id").cast("string"), col("cluster").cast("string"))
+        .as[(String, String)].collect().toMap
+    }
     val base = doc(50)
     val df1 = Seq(("a", base), ("b", base), ("c", doc(51)))
       .toDF("id", "text")
-    val fresh = MinHash.mark(df1, "id", "text")
-      .select("id", "is_near_dup").as[(String, Boolean)].collect().toMap
-    val viaStage = MinHash.mark(df1, "id", "text", stageDir = Some(dir))
-      .select("id", "is_near_dup").as[(String, Boolean)].collect().toMap
-    // identical results, and both intermediates committed durably
-    assert(viaStage == fresh)
-    assert(spark.read.parquet(s"$dir/signatures").count() > 0)
-    assert(spark.read.parquet(s"$dir/clusters").count() == 2) // a, b
-    // resume proof: run mark over DIFFERENT text (no duplicates at all)
-    // against the same stageDir — the committed signatures/clusters are
-    // reused, so 'b' is still marked, which can only happen if the
-    // signature pass was NOT recomputed from the new text
+    val fresh = clusters(df1, MinHash.Config(), None)
+    assert(fresh == Map("a" -> "a", "b" -> "a"))
+    assert(clusters(df1, MinHash.Config(), Some(dir)) == fresh)
+    val clDir = java.nio.file.Paths.get(dir, "clusters")
+    assert(java.nio.file.Files.exists(clDir.resolve("_SUCCESS")))
+    // resume proof: bands of DIFFERENT text (no duplicates at all)
+    // against the same dir — the committed map is reused, so 'b' is
+    // still clustered, which can only happen if nothing was recomputed
     val df2 = Seq(("a", doc(60)), ("b", doc(61)), ("c", doc(62)))
       .toDF("id", "text")
-    val resumed = MinHash.mark(df2, "id", "text", stageDir = Some(dir))
-      .select("id", "is_near_dup").as[(String, Boolean)].collect().toMap
-    assert(resumed == fresh,
-      "stageDir resume recomputed instead of reusing committed tables")
-    // a killed write (no _SUCCESS) is NOT treated as committed
-    val clDir = java.nio.file.Paths.get(dir, "clusters")
-    java.nio.file.Files.delete(clDir.resolve("_SUCCESS"))
-    val recomputed = MinHash.mark(df2, "id", "text", stageDir = Some(dir))
-      .select("id", "is_near_dup").as[(String, Boolean)].collect().toMap
-    // clusters recompute from the COMMITTED signatures (still df1's),
-    // so the result is unchanged — but the _SUCCESS marker is restored
-    assert(recomputed == fresh)
-    assert(java.nio.file.Files.exists(clDir.resolve("_SUCCESS")))
-    // flipping --minhash-verify ON against the same stageDir must NOT
-    // reuse the any-shared-band cluster map: the verified mode commits
-    // under its own leaf (clusters_v<threshold>), so clusters recompute
-    // under the new semantics. df2 has no duplicates, so the verified
-    // run finds none — reusing df1's committed clusters would have
-    // marked 'b' again.
-    val verified = MinHash.mark(df2, "id", "text",
-      cfg = MinHash.Config(verifyThreshold = 0.5), stageDir = Some(dir))
-      .select("id", "is_near_dup").as[(String, Boolean)].collect().toMap
-    assert(verified.values.forall(_ == false),
-      "verified resume reused the unverified cluster map")
+    assert(clusters(df2, MinHash.Config(), None).isEmpty)
+    assert(clusters(df2, MinHash.Config(), Some(dir)) == fresh,
+      "a committed cluster map was recomputed instead of reused")
+    // flipping --minhash-verify ON against the same dir must NOT reuse
+    // the any-shared-band cluster map: the verified mode commits under
+    // its own leaf (clusters_v<threshold>), so clusters recompute under
+    // the new semantics. df2 has no duplicates, so the verified run
+    // finds none — reusing df1's committed clusters would give a, b.
+    assert(clusters(df2, MinHash.Config(verifyThreshold = 0.5), Some(dir))
+      .isEmpty, "verified resume reused the unverified cluster map")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "clusters_v0.5", "_SUCCESS")))
+    // a killed write (no _SUCCESS) is NOT treated as committed: the map
+    // recomputes from the bands it is given and the marker is restored
+    java.nio.file.Files.delete(clDir.resolve("_SUCCESS"))
+    assert(clusters(df2, MinHash.Config(), Some(dir)).isEmpty)
+    assert(java.nio.file.Files.exists(clDir.resolve("_SUCCESS")))
   }
 
   test("committing a shuffled frame runs its stages once") {
@@ -829,7 +780,7 @@ class MinHashSpec extends SparkSpec {
 
   test("shingles of short docs fall back to whole text") {
     val df = Seq(("a", "tiny doc")).toDF("id", "text")
-    val sh = df.select(explode(MinHash.shingles($"text", 5)).as("s"))
+    val sh = df.select(explode(MinHashSql.shingles($"text", 5)).as("s"))
       .as[String].collect()
     assert(sh.toSeq == Seq("tiny doc"))
   }

@@ -86,8 +86,7 @@ class PipelineE2ESpec extends SparkSpec {
       .withColumn("minhash_cluster", lit(null).cast("string"))
     val afterExact =
       if (cfg.exactDedup)
-        ExactDedup.markById(alive, Seq("scrubbed_text"), Seq("warc_ts", "url"),
-            idCol = "url", idIsUnique = Some(false))
+        ExactDedup.mark(alive, Seq("scrubbed_text"), Seq("warc_ts", "url"))
           .withColumn("drop_stage",
             when(col("is_exact_dup"), lit(DropStage.ExactDup)))
           .drop("is_exact_dup")
