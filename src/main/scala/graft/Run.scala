@@ -223,8 +223,9 @@ object Run {
   def execute(spark: SparkSession, a: Map[String, String]): String = {
     val out = a.getOrElse("output",
       sys.error("--output <dir> is required"))
-    // every stage persist is released on return: execute() may run
-    // repeatedly on one long-lived session (CI, notebooks)
+    // every stage persist, and the materialized scored frame, is released
+    // on return: execute() may run repeatedly on one long-lived session
+    // (CI, notebooks)
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = {
       pins += df
@@ -603,29 +604,9 @@ object Run {
           col("_metadata.row_index")))
         inPhase(spark, "dedup")(CorpusPipeline.dedup(scored, cfg))
       } else {
-        // a persisted cache, not a SparkUtil.materialize checkpoint: once
-        // built, the cache reports its real size to the planner, while a
-        // checkpoint keeps its input's size estimate. Over --synth input
-        // that estimate is ~8 B/row, and with a checkpoint here the band
-        // join broadcast the whole band table: at 1M docs in a 2 GB
-        // driver the run failed building the broadcast.
-        // The cache is built uncompressed (compression cost 3-10x the
-        // scoring compute at 2M docs). The flag is read when the cache is
-        // registered, which runs no job, and is restored at once: unset
-        // again when it was unset, so no later job carries it.
-        val conf = spark.conf
-        val key = "spark.sql.inMemoryColumnarStorage.compressed"
-        val prev = conf.getAll.get(key) // None when unset: getOption gives the default
-        conf.set(key, "false")
-        val scored =
-          try pin(CorpusPipeline.score(pages, cfg, metrics = Some(metrics)))
-          finally prev.fold(conf.unset(key))(conf.set(key, _))
-        // under --task-metrics, force the scored cache inside its own
-        // phase (one no-op count against the registered cache) so the
-        // scoring compute is attributed to `score` instead of riding
-        // the first dedup job; without the listener the lazy build is
-        // byte-identical, so skip the extra action
-        if (taskMetrics.isDefined) inPhase(spark, "score")(scored.count())
+        val scored = inPhase(spark, "score")(CorpusPipeline.score(pages, cfg,
+          metrics = Some(metrics)).transform(SparkUtil.materialize))
+        pins += scored
         inPhase(spark, "dedup")(CorpusPipeline.dedup(scored, cfg))
       }
 
@@ -1238,7 +1219,7 @@ object Run {
     f"""{"docs_in":$total,"kept":$kept,"wall_sec":$wall%.1f,"docs_per_sec":${total / wall}%.0f,"partitions":${metrics.partitionsProcessed.value},"skew_factor":${metrics.skewFactor}%.2f,"stages":{$stagesJson}$exportJson$compactJson$tmJson}"""
 
     } finally {
-      pins.foreach(_.unpersist(false))
+      pins.foreach { p => p.unpersist(false); SparkUtil.release(p) }
       taskMetrics.foreach(spark.sparkContext.removeSparkListener)
     }
   }

@@ -39,16 +39,22 @@ object SparkEntry {
 
   // Memoized table resolution (r6): `s.read.parquet` re-runs datasource
   // resolution — file listing plus a driver-side footer schema-inference
-  // job — on EVERY call, which the job probe showed as a ~30 ms
-  // single-task job at the head of each bench query lap. The resolved
-  // DataFrame (an immutable logical plan; query METADATA, not data) is
-  // cached per (session, path); every execution still scans the parquet
-  // input. Bounded: a handful of sessions × ~10 tables.
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent((s, s"$dir/$name.parquet"),
-      key => key._1.read.parquet(key._2))
+  // job — on EVERY call, a ~30 ms single-task job at the head of each
+  // bench query lap. The resolved DataFrame pins its file listing, so it
+  // is cached per (session, path) with the path's modification time and
+  // resolved again when the path was rewritten (one getFileStatus per
+  // lookup); entries of stopped sessions are dropped.
+  private val tableCache = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String), (Long, DataFrame)]()
+  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    tableCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val mtime = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(path).getModificationTime
+    tableCache.compute((s, path.toString), (key, held) =>
+      if (held != null && held._1 == mtime) held
+      else (mtime, key._1.read.parquet(key._2)))._2
+  }
 
   /** Query vector for the similarity queries: embedding of vec_id 0,
     * degrading to a deterministic synthetic vector if that row is absent

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{classic, DataFrame, GraftDatasets}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Cross-cutting Spark helpers. */
 object SparkUtil {
@@ -20,24 +22,29 @@ object SparkUtil {
     *
     * Neither variant builds a columnar cache: both store rows, so the
     * session's columnar-cache settings (compression among them) do not
-    * apply, and no conf is written around them. Unlike a built cache,
-    * the result keeps its plan's size ESTIMATE, not its data's size: over
-    * an input whose estimate is far too small (`Synth.pages`, ~8 B/row)
-    * a join may broadcast a checkpoint of corpus size.
+    * apply, and no conf is written around them. The result's statistics
+    * are its stored blocks' size, not its plan's estimate, which can be
+    * ~40x too small (`Synth.pages`) and let a join broadcast a frame of
+    * corpus size. A frame with no partitions stores no block and keeps
+    * the estimate.
     *
-    * The reliable path checkpoints a local checkpoint of the frame:
-    * Spark's eager checkpoint runs TWO jobs over the RDD — the
-    * materializing count, then ReliableRDDCheckpointData's separate
-    * write job — so an unmaterialized frame is computed twice on exactly
-    * the cluster deployments this helper targets. Both jobs read the
-    * local blocks instead, which are released before returning.
+    * The reliable path checkpoints a local checkpoint of the frame, and
+    * keeps its statistics: Spark's eager checkpoint runs TWO jobs over
+    * the RDD — the materializing count, then the separate write job — so
+    * an unmaterialized frame would be computed twice on exactly the
+    * cluster deployments this helper targets. Both jobs read the local
+    * blocks instead, which are released before returning.
     */
-  def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val local = df.localCheckpoint()
-      try local.checkpoint()
-      finally release(local)
-    } else df.localCheckpoint()
+  def materialize(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val cp = df.localCheckpoint()
+    val l = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val local = s.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id).fold(cp)(i =>
+      GraftDatasets.ofRows(s, l.copy()(s,
+        Some(Statistics(sizeInBytes = i.memSize + i.diskSize)), Some(l.constraints))))
+    if (s.sparkContext.getCheckpointDir.isEmpty) local
+    else try local.checkpoint() finally release(local)
+  }
 
   /** Explicitly drop a [[materialize]]d frame's stored blocks NOW instead
     * of waiting for the ContextCleaner's weak-reference GC. Matters for
@@ -49,7 +56,7 @@ object SparkUtil {
     * reads. No-op for plans that are not local checkpoints.
     */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case l: org.apache.spark.sql.execution.LogicalRDD =>
+    case l: LogicalRDD =>
       l.rdd.unpersist(blocking = false); ()
     case _ => ()
   }

@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 /** MinHash-LSH near-duplicate detection, expressed as Catalyst-friendly
   * DataFrame ops end to end: posexplode word shingles → seeded 64-bit
   * min-hashes → per-band hashes → groupBy(band) candidate edges →
-  * distributed connected components → anti-join removal.
+  * distributed connected components → a left join of each doc's
+  * component-min representative.
   *
   * Mirrors the reference's 4-stage datatrove MinHash flow
   * (/root/reference/datatrove/3-local_dedupe_minhash.py:50-124, config at
@@ -46,11 +47,11 @@ object MinHash {
         * agreeing permutations — the standard unbiased MinHash
         * estimator) reaches this threshold. Cuts the S-curve's
         * false-positive tail (a 14×8 plan at ~0.72 still fires on ~2%
-        * of 0.4-similar pairs) at the cost of persisting BOTH the
+        * of 0.4-similar pairs) at the cost of materializing BOTH the
         * numHashes-long vector table and the band table derived from it
-        * (~3.6× the reference-mode cache — see [[mark]]'s persist
-        * comment) plus one edge-sized verification join. 0 (default)
-        * keeps the reference's any-shared-band semantics. Verification
+        * (~3.6× the reference-mode signature table — see [[mark]]) plus
+        * one edge-sized verification join. 0 (default) keeps the
+        * reference's any-shared-band semantics. Verification
         * applies to the STAR edge set (member → min-id representative),
         * so clustering remains CC over verified star edges; see
         * [[verifiedEdges]] for the resulting semantics (a pair can be
@@ -229,10 +230,10 @@ object MinHash {
     * Results are unaffected: every consumer is id-keyed or aggregated.
     *
     * The split count comes from the plan: under AQE `df.rdd` runs the
-    * input's shuffle and broadcast stages (the pipeline passes an
-    * anti-join) only to discard them. AQE wraps only plans with an
-    * exchange, whose planned width is read instead (0 = unknown: left
-    * alone); `df.rdd` of any other plan is its scan splits, no job.
+    * input's shuffle and broadcast stages only to discard them. AQE
+    * wraps only plans with an exchange, whose planned width is read
+    * instead (0 = unknown: left alone); `df.rdd` of any other plan is
+    * its scan splits, no job.
     */
   private[graft] def parallelized(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -251,7 +252,8 @@ object MinHash {
     */
   def candidateEdges(sigs: DataFrame): DataFrame = {
     // the aggregation and the join probe each consume `sigs` — callers
-    // should persist it ([[mark]] does) so the signature UDF runs once.
+    // pass a materialized table ([[mark]] and [[clustersOf]]'s callers
+    // do) so the signature UDF runs once.
     // (An explicit shared repartition was tried and reverted: AQE does not
     // reuse the exchange across the two branches, so it recomputed the
     // full signature pass twice — 4× slower unpersisted.) Hot band hashes
@@ -389,10 +391,8 @@ object MinHash {
             "band-format reference signatures cannot be Jaccard-tested; " +
             "re-snapshot with MinHash.sigVectors / --write-sigs")
         // materialized: the vector UDF pass over the incoming text has
-        // two consumers (band fold + verification join) — an eager
-        // checkpoint guarantees one execution (the lazy persist raced
-        // under AQE's concurrent exchange materialization; see
-        // mark) and needs no unpersist bookkeeping.
+        // two consumers (band fold + verification join), and an eager
+        // checkpoint runs it exactly once.
         val newVecs = sigVectors(newDf, idCol, textCol, cfg)
           .transform(graft.SparkUtil.materialize)
         // per-bucket reps: stored with the snapshot when available
@@ -693,18 +693,13 @@ object MinHash {
           (implicit spark: SparkSession): DataFrame = {
     // materialize the narrow signature table (id + 2 longs per band,
     // ~30 MB per 1M docs): candidateEdges consumes it twice and the
-    // min-hash UDF pass over the corpus text is the expensive part.
-    // r6: an eager checkpoint (SparkUtil.materialize) instead of the r5
-    // lazy persist — AQE materializes candidateEdges' two exchanges
-    // (aggregation + join probe) CONCURRENTLY, and the job probe showed
-    // both branches recomputing the full signature subtree (corpus scan
-    // + hash UDF, twice) despite the registered persist: concurrent
-    // cold-cache population + AQE's plan rewriting defeat
-    // InMemoryRelation reuse here. The checkpoint guarantees exactly
-    // one execution by construction, stores the same executor-local
-    // blocks, and needs no unpersist bookkeeping (ContextCleaner-
-    // managed). Same for the verification-mode vector table and the
-    // band table folded from it, which candidateEdges also reads twice.
+    // min-hash UDF pass over the corpus text is the expensive part. An
+    // eager checkpoint runs that pass exactly once; a lazy persist does
+    // not, since AQE materializes candidateEdges' two exchanges
+    // (aggregation + join probe) concurrently and both branches
+    // recompute the signature subtree. Same for the verification-mode
+    // vector table and the band table folded from it, which
+    // candidateEdges also reads twice.
     val vecs = Option.when(cfg.verifyThreshold > 0.0)(
       sigVectors(df, idCol, textCol, cfg).transform(graft.SparkUtil.materialize))
     val sigs = vecs.fold(signatures(df, idCol, textCol, cfg))(

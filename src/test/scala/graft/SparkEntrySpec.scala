@@ -29,6 +29,21 @@ class SparkEntrySpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("a table rewritten within the session is read anew") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("entry_rewrite").toString
+    def write(langs: Seq[String]): Unit = langs.zipWithIndex
+      .map { case (l, i) => (i.toLong, s"doc $i", l) }.toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def counts = SparkEntry.queries("q_group_count")(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    write(Seq("en", "en", "en"))
+    assert(counts === Map("en" -> 3L))
+    // the overwrite deletes the files the first resolution listed
+    write(Seq("fr", "fr"))
+    assert(counts === Map("fr" -> 2L))
+  }
+
   test("oracle-checked queries have stable column names across runs") {
     // the driver hash-compares after sorting columns by name — guard
     // against accidental auto-generated aliases like sum(x)

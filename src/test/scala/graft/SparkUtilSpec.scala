@@ -55,13 +55,53 @@ class SparkUtilSpec extends SparkSpec {
     } finally setCheckpointDirRaw(None)
   }
 
+  test("a materialized frame reports the size of its stored blocks") {
+    // the figure the planner reads, against the same frame's built
+    // columnar cache, which reports its real size. A checkpoint that
+    // kept its plan's estimate read ~14 B/row here, ~40x too small.
+    def reportedOverCached(): Double = {
+      val m = SparkUtil.materialize(CorpusPipeline.score(Synth.pages(spark, 4000L)))
+      try {
+        val reported = m.queryExecution.optimizedPlan.stats.sizeInBytes
+        m.cache().count()
+        // a fresh select plans over the built cache
+        val cached = m.select("*").queryExecution.optimizedPlan.stats.sizeInBytes
+        reported.toDouble / cached.toDouble
+      } finally { m.unpersist(blocking = true); SparkUtil.release(m) }
+    }
+    val local = reportedOverCached()
+    assert(local > 0.5 && local < 2.0, s"local checkpoint: $local x the cache")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "precondition: no checkpoint dir")
+    try {
+      spark.sparkContext.setCheckpointDir(Files.createTempDirectory("mat_size").toString)
+      val reliable = reportedOverCached()
+      assert(reliable > 0.5 && reliable < 2.0, s"reliable checkpoint: $reliable x the cache")
+    } finally setCheckpointDirRaw(None)
+  }
+
+  test("a join does not broadcast a materialized frame above the threshold") {
+    // ~1 KB a row, over an input the planner estimates at ~18 B a row
+    val wide = udf((i: Long) => "x" * 1000 + i)
+    val m = SparkUtil.materialize(
+      spark.range(20000).select(col("id"), wide(col("id")).as("s")))
+    try {
+      val joined = m.join(m.select(col("id"), col("s").as("s2")), "id")
+      val planned = joined.queryExecution.executedPlan.toString
+      assert(!planned.contains("BroadcastHashJoin"), planned)
+      assert(joined.count() === 20000L)
+      // the stored rows are above the threshold the planner compares with
+      assert(m.queryExecution.optimizedPlan.stats.sizeInBytes >
+        org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold)
+    } finally SparkUtil.release(m)
+  }
+
   test("no pipeline job runs with the columnar-cache compression conf written") {
     // SQL confs a session has written ride every job's local properties,
     // and the session is shared: a pipeline path that sets this conf, or
     // restores it by writing the default back, leaves it written for
     // every later job of every suite. No suite writes it, so a job
-    // carrying it means a pipeline path did. (graft.Run sets it only
-    // while it registers its scored cache, which runs no job.)
+    // carrying it means a pipeline path did. (Both paths hold the scored
+    // frame with SparkUtil.materialize, which builds no columnar cache.)
     val key = "spark.sql.inMemoryColumnarStorage.compressed"
     def written(jobs: Seq[java.util.Properties]) =
       jobs.flatMap(p => Option(p.getProperty(key))).distinct
